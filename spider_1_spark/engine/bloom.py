@@ -9,9 +9,12 @@ maintained as … state tables at 10^10-URL scale".  Design:
     bitmap sidecar, versioned like every other state table
     (``bloom/v=<n>/shard-<k>.npy``) and committed under the same
     manifest (SPEC-12 resume covers it);
-  * per wave, the NEW seen URLs are partitioned by shard and each task
-    ORs its shard's new bits into the previous version's bitmap
-    (incremental; write = O(new urls + bitmap));
+  * per wave, the NEW seen URLs are hash-partitioned by shard into at
+    most ``spark.sql.shuffle.partitions`` tasks; each task owns a
+    disjoint set of shards and streams them one at a time, ORing each
+    shard's new bits into the previous version's bitmap (incremental;
+    write = O(new urls + touched bitmaps), one bitmap in memory per
+    task);
   * the probe is fused into the fetch/extract Arrow stage
     (``probe_pandas``): each worker lazily caches the shard bitmaps it
     touches — no extra shuffle.  At 10^10 URLs (thousands of larger
@@ -56,7 +59,9 @@ class ShardIO(Protocol):
         already all-or-nothing on S3/GCS/ABFS (the key is absent until
         the PUT completes, then serves the full payload).  Exactly-one
         -writer per shard is guaranteed upstream by the shard-keyed
-        repartition in ``update`` — where that cannot be relied on,
+        repartition in ``update``: every row of a shard lands in one
+        task, and that task publishes the shard once, after its last
+        row — where that cannot be relied on,
         use a conditional PUT (S3 ``If-None-Match: *`` on versioned
         keys / GCS ``ifGenerationMatch=0``) so a duplicate speculative
         task fails instead of double-publishing.  Shard keys are
@@ -195,6 +200,20 @@ class BloomStore:
                 self.io.delete_dir(path)
 
 
+def _shard_col(url_col: str, n_shards: int):
+    """Spark column: the URL's shard id, ``h1(url) % n_shards`` — the
+    same blake2b-derived shard as ``probe_pandas`` uses."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.IntegerType())
+    def shard_udf(urls: pd.Series) -> pd.Series:
+        h1, _ = _hashes(urls)
+        return pd.Series((h1 % np.uint64(n_shards)).astype(np.int32))
+
+    return shard_udf(F.col(url_col))
+
+
 def probe_pandas(
     urls: pd.Series,
     bloom: BloomStore,
@@ -225,17 +244,8 @@ def probe_pandas(
 def probe(df, bloom: BloomStore, version: int, url_col: str = "url"):
     """Standalone shard-ALIGNED probe stage (the 10^10-scale variant):
     repartitions by shard so each task loads few sidecars."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     n_shards = bloom.n_shards
-
-    @F.pandas_udf(T.IntegerType())
-    def shard_udf(urls: pd.Series) -> pd.Series:
-        h1, _ = _hashes(urls)
-        return pd.Series((h1 % np.uint64(n_shards)).astype(np.int32))
-
-    df = df.withColumn("_shard", shard_udf(F.col(url_col)))
+    df = df.withColumn("_shard", _shard_col(url_col, n_shards))
     out_schema = df.schema.add("maybe_seen", "boolean")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -260,43 +270,49 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
            new_version: int) -> None:
     """OR the new URLs' bits into each touched shard.
 
-    Tasks are partitioned by the TRUE shard key (same blake2b-derived
-    shard as the probe) so exactly one task owns each shard file —
+    Rows are hash-partitioned on the TRUE shard key (same
+    blake2b-derived shard as the probe) into ``min(n_shards,
+    spark.sql.shuffle.partitions)`` tasks, so each task owns a disjoint
+    set of shards and exactly one task writes each shard file —
     concurrent writers to one shard would lose bits (false negatives).
-    Untouched shards are found at older versions by ``load_shard``.
+    Each task sorts its rows by shard and streams the shards one at a
+    time: load the previous version's bitmap, OR in the new bits,
+    publish, move on — at most one bitmap in memory per task.  Fewer
+    tasks than shards saves the per-task Python-worker cost, which
+    dwarfs the hashing and shard I/O.  Untouched shards are found at
+    older versions by ``load_shard``.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     n_shards = bloom.n_shards
-
-    @F.pandas_udf(T.IntegerType())
-    def shard_udf(urls: pd.Series) -> pd.Series:
-        h1, _ = _hashes(urls)
-        return pd.Series((h1 % np.uint64(n_shards)).astype(np.int32))
-
-    df = new_urls_df.select(
-        F.col("url"), shard_udf(F.col("url")).alias("_shard")
+    n_tasks = min(
+        n_shards,
+        int(new_urls_df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", "32")),
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, np.ndarray] = {}
+        shard, bm = None, None
         for pdf in batches:
-            for shard, grp in pdf.groupby("_shard"):
-                bm = acc.get(int(shard))
-                if bm is None:
-                    bm = bloom.load_shard(prev_version, int(shard)).copy()
-                    acc[int(shard)] = bm
+            for s, grp in pdf.groupby("_shard"):
+                if s != shard:
+                    if bm is not None:
+                        bloom.write_shard(new_version, shard, bm)
+                        yield pd.DataFrame({"shard": [shard], "n": [1]})
+                    shard = int(s)
+                    bm = bloom.load_shard(prev_version, shard).copy()
                 h1, h2 = _hashes(grp["url"])
                 for i in range(BLOOM_K):
                     pos = (h1 + np.uint64(i) * h2) % np.uint64(bloom.m_bits)
                     byte = (pos >> np.uint64(3)).astype(np.int64)
                     bit = (pos & np.uint64(7)).astype(np.int64)
                     np.bitwise_or.at(bm, byte, (1 << bit).astype(np.uint8))
-        for shard, bm in acc.items():
+        if bm is not None:
             bloom.write_shard(new_version, shard, bm)
             yield pd.DataFrame({"shard": [shard], "n": [1]})
 
-    df.repartition(n_shards, "_shard").mapInPandas(
-        gen, "shard int, n int"
-    ).count()
+    (
+        new_urls_df.select("url", _shard_col("url", n_shards).alias("_shard"))
+        .repartition(n_tasks, "_shard")
+        .sortWithinPartitions("_shard")
+        .mapInPandas(gen, "shard int, n int")
+        .count()
+    )

@@ -510,16 +510,6 @@ class SparkCrawler:
         fetchset = ranked.filter(F.col("g") < remaining).withColumn(
             "seq", F.col("g") + F.lit(src["seq_next"])
         )
-        # persist (NOT localCheckpoint): every downstream branch
-        # re-references this frame (anti-join, per-host agg, log write,
-        # fetch stage) so it must be cached, and persist() is the form
-        # the wave commit can actually RELEASE — a localCheckpoint's
-        # RDD blocks are not freed by DataFrame.unpersist() and linger
-        # until GC (ADVICE r1: cached-block growth on long crawls).
-        # Lineage depth is bounded per wave regardless: each wave
-        # starts from the committed parquet snapshots.  Lazy: the
-        # per-partition count right below is the single next action,
-        # so it doubles as the materializing job.
         # lazy localCheckpoint (not persist): every downstream branch
         # re-references this frame (anti-join, per-host agg, log write,
         # fetch stage), and the branches run from CONCURRENT driver

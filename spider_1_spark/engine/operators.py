@@ -69,14 +69,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize(u) if u is not None else None)
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """A2: canonicalize relative refs against per-row base URLs."""
-    return pd.Series(
-        [canonicalize(u, base=b) for u, b in zip(urls, bases)], dtype=object
-    )
-
-
 # ------------------------------------------------------------------ A3/A4
 
 @F.pandas_udf(T.StringType())
@@ -581,11 +573,3 @@ def decode_images(img_refs: DataFrame, web_b) -> DataFrame:
 
     return img_refs.select("url", "caption").mapInPandas(gen, IMG_OUT_SCHEMA)
 
-
-# ------------------------------------------------------------------ A20
-
-def partition_counts(df: DataFrame, name: str) -> DataFrame:
-    """A20: per-partition lineage counter for one stage (SPEC-11)."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias(name)
-    )

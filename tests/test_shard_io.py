@@ -11,11 +11,18 @@ object-store impl documented on ShardIO).
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
+import sys
+import uuid
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark import cloudpickle
 
+from spider_1_spark.engine import bloom
 from spider_1_spark.engine.bloom import (
     BloomStore,
     LocalShardIO,
@@ -150,3 +157,93 @@ def test_local_prune_removes_crash_residue(tmp_path):
     store.prune(0)
     assert np.array_equal(store.load_shard(3, 0), bm0)
     assert not os.path.exists(store.vdir(3))
+
+
+class WriteOnceShardIO(LocalShardIO):
+    """Publishes each final key at most once — the shape of an
+    object-store conditional PUT (``If-None-Match: *``).  ``os.link``
+    fails if the key exists, so a second publish of a shard at one
+    version raises instead of silently replacing the first."""
+
+    def write_atomic(self, path: str, payload: bytes) -> None:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(payload)
+        try:
+            os.link(tmp, path)
+        finally:
+            os.unlink(tmp)
+
+
+# Python workers cannot import this test module, so ship its classes
+# (WriteOnceShardIO inside a BloomStore) by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _shard_of(url: str, n_shards: int) -> int:
+    d = hashlib.blake2b(url.encode("utf-8"), digest_size=16).digest()
+    return int.from_bytes(d[:8], "big") % n_shards
+
+
+def _npy_bytes(bm: np.ndarray) -> bytes:
+    buf = io.BytesIO()
+    np.save(buf, bm, allow_pickle=False)
+    return buf.getvalue()
+
+
+def test_update_streams_more_shards_than_tasks(spark, tmp_path):
+    """``bloom.update`` with 16 shards over the session's 4 shuffle
+    partitions: each task owns several shards and streams them.  Tiny
+    Arrow batches split one shard's rows across batches.  Over two
+    versions every inserted URL probes positive, untouched shards get
+    no new file, every file equals a driver-side build byte for byte,
+    and the write-once ShardIO proves each shard is published once."""
+    n_shards = 16
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < n_shards
+    store = BloomStore(
+        str(tmp_path), n_shards=n_shards, m_bits=1 << 12,
+        io=WriteOnceShardIO(),
+    )
+    v0 = [f"http://h{i % 23}.test/a{i}" for i in range(300)]
+    # v1 reaches only the low half of the shards, and repeats some v0
+    # URLs (re-inserting set bits must not change the bitmap)
+    fresh = (f"http://h{i % 29}.test/b{i}" for i in range(10**4))
+    v1 = [u for u in fresh if _shard_of(u, n_shards) < n_shards // 2][:200]
+    v1 += [u for u in v0 if _shard_of(u, n_shards) < n_shards // 2][:20]
+    touched = [{_shard_of(u, n_shards) for u in urls} for urls in (v0, v1)]
+    assert touched[0] == set(range(n_shards))
+    assert touched[1] == set(range(n_shards // 2))
+
+    def df(urls):
+        return spark.createDataFrame([(u,) for u in urls], "url string")
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        bloom.update(df(v0), store, -1, 0)
+        bloom.update(df(v1), store, 0, 1)
+    finally:
+        spark.conf.set(key, old)
+
+    # zero false negatives at v1, via both probe paths
+    every = v0 + v1
+    assert bloom.probe_pandas(pd.Series(every), store, 1, {}).all()
+    probed = bloom.probe(df(every), store, 1).collect()
+    assert len(probed) == len(every)
+    assert all(r["maybe_seen"] for r in probed)
+
+    for version in (0, 1):
+        inserted = v0 if version == 0 else v0 + v1
+        names = sorted(os.listdir(store.vdir(version)))
+        assert names == sorted(
+            f"shard-{k}.npy" for k in touched[version]
+        ), f"v={version}: exactly the touched shards, no tmp residue"
+        for k in touched[version]:
+            want = _bitmap(
+                store.m_bits,
+                [u for u in inserted if _shard_of(u, n_shards) == k],
+            )
+            got = store.io.read(store.shard_path(version, k))
+            assert got == _npy_bytes(want), (version, k)
