@@ -21,7 +21,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(cpus: int, n_rows: int, rep: int = 0) -> dict:
+def run(cpus: int, n_rows: int) -> dict:
     env = dict(os.environ)
     env.update(
         SPARK_GRAFT_CPUS=str(cpus),
@@ -44,15 +44,6 @@ def run(cpus: int, n_rows: int, rep: int = 0) -> dict:
             f"bench.py ({cpus} cpus, n={n_rows}) exited "
             f"{out.returncode}; stderr tail:\n{out.stderr[-4000:]}"
         )
-    if os.environ.get("SPIDER1_PROFILE"):
-        # keep the [wave-prof] stage lines: they are the per-stage
-        # evidence that the schedule->rank->gate fixed chain amortizes
-        # at large wave sizes (BENCH/BASELINE.md §3f/§3g)
-        log = os.path.join(
-            REPO, "BENCH", f"prof_{n_rows}_{cpus}c_rep{rep}.log"
-        )
-        with open(log, "w") as f:
-            f.write(out.stdout)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -68,7 +59,7 @@ def main() -> None:
         for rep in range(1, reps + 1):
             pair = {}
             for cpus in (lo, hi):
-                r = run(cpus, n_rows, rep)
+                r = run(cpus, n_rows)
                 pair[cpus] = r["value"]
                 f.write(json.dumps(r) + "\n")
                 f.flush()

@@ -17,9 +17,7 @@ maintained as … state tables at 10^10-URL scale".  Design:
     task);
   * the probe is fused into the fetch/extract Arrow stage
     (``probe_pandas``): each worker lazily caches the shard bitmaps it
-    touches — no extra shuffle.  At 10^10 URLs (thousands of larger
-    shards on shared storage) the standalone shard-aligned ``probe``
-    stage bounds per-task I/O instead;
+    touches — no extra shuffle;
   * ZERO false negatives by construction (bits only set for real
     URLs — property-tested in tests/test_properties.py); false
     positives are resolved by the exact join on the (small)
@@ -241,31 +239,6 @@ def probe_pandas(
     return hit
 
 
-def probe(df, bloom: BloomStore, version: int, url_col: str = "url"):
-    """Standalone shard-ALIGNED probe stage (the 10^10-scale variant):
-    repartitions by shard so each task loads few sidecars."""
-    n_shards = bloom.n_shards
-    df = df.withColumn("_shard", _shard_col(url_col, n_shards))
-    out_schema = df.schema.add("maybe_seen", "boolean")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.copy()
-            pdf["maybe_seen"] = probe_pandas(
-                pdf[url_col], bloom, version, cache
-            )
-            yield pdf
-
-    return (
-        df.repartition(n_shards, "_shard")
-        .mapInPandas(gen, out_schema)
-        .drop("_shard")
-    )
-
-
 def update(new_urls_df, bloom: BloomStore, prev_version: int,
            new_version: int) -> None:
     """OR the new URLs' bits into each touched shard.
@@ -282,12 +255,10 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
     dwarfs the hashing and shard I/O.  Untouched shards are found at
     older versions by ``load_shard``.
     """
+    from spider_1_spark.engine.operators import shuffle_partitions
+
     n_shards = bloom.n_shards
-    n_tasks = min(
-        n_shards,
-        int(new_urls_df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32")),
-    )
+    n_tasks = min(n_shards, shuffle_partitions(new_urls_df.sparkSession))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         shard, bm = None, None

@@ -45,9 +45,10 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spider_1_spark.engine import bloom as bloom_mod
 from spider_1_spark.engine import operators as ops
 from spider_1_spark.engine.state import HOSTS_SCHEMA, METRICS_SCHEMA
 from spider_1_spark.reference_model.spider1_ref import COUNTER_NAMES, Policy
@@ -109,15 +110,10 @@ class SparkCrawler:
         policy: Policy,
         web,
         root: str,
-        n_salts: int = 8,
-        rank_partitions: int | None = None,
-        use_bloom: bool = True,
         bloom_shards: int = 32,
         bloom_bits: int = 1 << 22,
-        aligned_probe: bool = False,
         store=None,
         bloom_root: str | None = None,
-        hosts_broadcast_max: int = 4_000_000,
         bloom_io=None,
     ):
         self.spark = spark
@@ -136,37 +132,13 @@ class SparkCrawler:
 
             store = make_store(spark, root)
         self.store = store
-        self.n_salts = n_salts
-        self.rank_partitions = rank_partitions
-        self.use_bloom = use_bloom
-        # aligned_probe: probe bloom shards in a standalone
-        # shard-ALIGNED stage (bloom.probe) instead of fusing the probe
-        # into the fetch/extract Arrow stage.  The fused probe is
-        # faster here (no extra shuffle; every worker lazily caches the
-        # shards it touches), but at the 10^10-URL design point —
-        # thousands of multi-GB shards on shared storage — the aligned
-        # stage bounds per-task sidecar I/O to ~1 shard instead of
-        # worst-case all of them; flip this flag on a real cluster when
-        # shard count × shard size outgrows executor page cache.
-        self.aligned_probe = aligned_probe
-        # hosts side of the frontier⋈hosts join is broadcast below this
-        # driver-tracked host count, partitioned-shuffle joined above it
-        self.hosts_broadcast_max = hosts_broadcast_max
-        from spider_1_spark.engine.bloom import BloomStore
-
         # bloom_io: a bloom.ShardIO for non-local shard storage (the
         # object-store deployments the ShardIO docstring maps out);
         # default LocalShardIO.  The instance rides inside BloomStore
         # through the worker-side probe closures, so it must pickle.
-        self.bloom = BloomStore(
+        self.bloom = bloom_mod.BloomStore(
             bloom_root or root, bloom_shards, bloom_bits, io=bloom_io
         )
-        # profiler state must exist before any thread can race the
-        # lazy getattr in _prof (two first-marker threads would each
-        # build a threading.local and one side's deltas would reset)
-        import threading
-
-        self._prof_tl = threading.local()
 
     # ------------------------------------------------------------ run
 
@@ -198,11 +170,8 @@ class SparkCrawler:
         )
         st.write_version("seen", 0, seen0)
         st.write_version("hosts", 0, self.spark.createDataFrame([], HOSTS_SCHEMA))
-        if self.use_bloom:
-            from spider_1_spark.engine import bloom as bloom_mod
-
-            self.bloom.prune(-1)
-            bloom_mod.update(seen0.select("url"), self.bloom, -1, 0)
+        self.bloom.prune(-1)
+        bloom_mod.update(seen0.select("url"), self.bloom, -1, 0)
         counters = {k: 0 for k in COUNTER_NAMES}
         counters["deduped"] = seed_deduped
         # empty seed frontier => zero waves, like the oracle's
@@ -213,7 +182,6 @@ class SparkCrawler:
             "versions": {"frontier": 0, "seen": 0, "hosts": 0},
             "seq_next": 0,
             "global_fetched": 0,
-            "n_hosts": 0,
             "counters": counters,
             "done": empty,
         }
@@ -227,8 +195,7 @@ class SparkCrawler:
         if manifest is None:
             raise ValueError(f"no manifest at {self.store.root}")
         st.cleanup()
-        if self.use_bloom:
-            self.bloom.prune(manifest["versions"]["seen"])
+        self.bloom.prune(manifest["versions"]["seen"])
         return self._loop(manifest, max_waves)
 
     # ----------------------------------------------------------- loop
@@ -303,31 +270,6 @@ class SparkCrawler:
 
     # ----------------------------------------------------------- wave
 
-    def _prof(self, label: str) -> None:
-        """SPIDER1_PROFILE=1: per-stage wall-clock for wave tuning.
-
-        The previous-marker timestamp is THREAD-LOCAL: under wave
-        pipelining the loop thread and the pooled harvest thread both
-        emit markers, and a shared timestamp would interleave their
-        deltas into nonsense exactly in the pipelined regime the
-        profile exists to tune (ADVICE r2).  Each line is tagged with
-        the emitting thread so the two streams separate cleanly."""
-        import os
-        import threading
-        import time
-
-        if os.environ.get("SPIDER1_PROFILE"):
-            now = time.time()
-            tl = self._prof_tl  # built eagerly in __init__ (race-free)
-            prev = getattr(tl, "t", now)
-            tname = threading.current_thread().name
-            print(
-                f"[wave-prof] [{tname}] {label}: +{now - prev:.2f}s "
-                f"@{now % 10000:.1f}",
-                flush=True,
-            )
-            tl.t = now
-
     def _branch(self, pool_name: str, fn):
         """Tag a branch thread's Spark jobs with a scheduler pool.
 
@@ -345,27 +287,6 @@ class SparkCrawler:
         wrapped.__name__ = getattr(fn, "__name__", "branch")
         return wrapped
 
-    @staticmethod
-    def _timed(fn):
-        """Wrap a branch callable with wall-clock reporting (profiling)."""
-        import os
-        import time
-
-        if not os.environ.get("SPIDER1_PROFILE"):
-            return fn
-
-        def wrapped(*a, **kw):
-            t0 = time.time()
-            try:
-                return fn(*a, **kw)
-            finally:
-                print(
-                    f"[branch-prof] {fn.__name__}: {time.time() - t0:.2f}s",
-                    flush=True,
-                )
-
-        return wrapped
-
     def _wave_critical(self, src: dict) -> dict:
         """Run wave ``src["wave_id"]+1`` up to (and including) the state
         snapshots the NEXT wave reads; return a ``pending`` dict with
@@ -380,7 +301,6 @@ class SparkCrawler:
         cdelta = {k: 0 for k in COUNTER_NAMES}
         metrics: list[tuple] = []  # (stage, pid, counter_name, n)
 
-        self._prof(f"w{wave} start")
         # In-memory handoff from the previous wave when available: the
         # frontier PARQUET write is a lagging branch (joined at that
         # wave's commit), so reading it back here would stall on it.
@@ -412,17 +332,13 @@ class SparkCrawler:
         # even when a wave brought no new hosts — the steady state of a
         # long crawl; now the distinct shuffles only unmatched rows
         # (wave 0: all, later: ~none) and the robots/union chain
-        # short-circuits entirely when there are none.  The hosts side
-        # is broadcast while the driver-tracked host count stays under
-        # hosts_broadcast_max; past that (10^8-host design point) it
-        # falls back to a partitioned shuffle join automatically —
-        # VERDICT r1 flagged the unconditional broadcast as the first
-        # thing to die at scale.
-        n_hosts_known = src.get("n_hosts")
-        hosts_sel = hosts.select("host", "rules_json", "fetch_total")
-        if n_hosts_known is None or n_hosts_known <= self.hosts_broadcast_max:
-            hosts_sel = F.broadcast(hosts_sel)
-        fr = frontier.join(hosts_sel, "host", "left")
+        # short-circuits entirely when there are none.  No hint on the
+        # hosts side: Spark's planner broadcasts the hosts snapshot
+        # while its size stays under autoBroadcastJoinThreshold and
+        # shuffle-joins it past that (the 10^8-host design point).
+        fr = frontier.join(
+            hosts.select("host", "rules_json", "fetch_total"), "host", "left"
+        )
         new_hosts = (
             fr.filter(F.col("fetch_total").isNull())
             .select("host", "host_hash")
@@ -457,7 +373,6 @@ class SparkCrawler:
             .drop("_rj", "_ft")
         )
         hosts_all = hosts.unionByName(new_host_rows)
-        self._prof("hosts-join")
 
         # --- robots gate + t0 ----------------------------------------
         # allow-all hosts (rules_json "[]") short-circuit JVM-side; the
@@ -488,7 +403,6 @@ class SparkCrawler:
             ("robots", pid, "robots_blocked", n)
             for pid, n in self._pcount_rows(fr.filter(~F.col("allowed")))
         ]
-        self._prof("fr-materialize")
 
         # Columns dead past the robots gate are dropped BEFORE the rank
         # chain: rules_json (robots JSON strings — the widest column),
@@ -501,12 +415,8 @@ class SparkCrawler:
         )
 
         # --- A5+A9+A10: candidates, global rank, G cutoff ------------
-        cand = ops.candidate_set(
-            allowed, pol, self.n_salts, num_partitions=self.rank_partitions
-        )
-        ranked = ops.with_global_rank(
-            cand, spark, KEY, out_col="g", num_partitions=self.rank_partitions
-        )
+        cand = ops.candidate_set(allowed, pol)
+        ranked = ops.with_global_rank(cand, spark, KEY, out_col="g")
         fetchset = ranked.filter(F.col("g") < remaining).withColumn(
             "seq", F.col("g") + F.lit(src["seq_next"])
         )
@@ -554,7 +464,6 @@ class SparkCrawler:
             )
         else:
             kstar = None
-        self._prof("schedule+rank")
 
         # --- concurrent wave DAG -------------------------------------
         # The rest of the wave is a DAG of Spark jobs whose edges are
@@ -657,7 +566,7 @@ class SparkCrawler:
             ]
             return rest, rows
 
-        def hosts_branch() -> int:
+        def hosts_branch() -> None:
             hosts_next = (
                 hosts_all.join(_f_h(), "host", "left")
                 .withColumn(
@@ -670,20 +579,15 @@ class SparkCrawler:
                 .drop("F_h")
             )
             st.write_version("hosts", v["hosts"] + 1, hosts_next)
-            # cache hit (the write scanned hosts_all ∪ new_host_rows):
-            # the host-count bookkeeping rides this branch instead of
-            # occupying a critical-path job
-            return new_host_rows.count()
 
         def fh_branch() -> int:
             return fh.count()
 
-        fut_fh = pool.submit(self._timed(self._branch(CRITICAL_POOL, fh_branch)))
-        fut_robots = pool.submit(self._timed(self._branch(LAGGING_POOL, robots_branch)))
-        fut_log = pool.submit(self._timed(self._branch(LAGGING_POOL, log_branch)))
-        fut_gate = pool.submit(self._timed(self._branch(CRITICAL_POOL, gate_branch)))
-        fut_hosts = pool.submit(self._timed(self._branch(CRITICAL_POOL, hosts_branch)))
-        self._prof("fork-side-branches")
+        fut_fh = pool.submit(self._branch(CRITICAL_POOL, fh_branch))
+        fut_robots = pool.submit(self._branch(LAGGING_POOL, robots_branch))
+        fut_log = pool.submit(self._branch(LAGGING_POOL, log_branch))
+        fut_gate = pool.submit(self._branch(CRITICAL_POOL, gate_branch))
+        fut_hosts = pool.submit(self._branch(CRITICAL_POOL, hosts_branch))
 
         def harvest_run() -> dict:
             """A12–A18: fetch → extract → dedup → seen/bloom/images.
@@ -715,21 +619,9 @@ class SparkCrawler:
             hdelta = {"deduped": 0}
 
             # --- A12/A13(+A2+A6): fused fetch+extract+canon+bloom ---
-            if self.use_bloom and self.aligned_probe:
-                from spider_1_spark.engine import bloom as bloom_mod
-
-                refs = ops.fetch_extract(fetchset, self.web_b, bloom=None)
-                refs = bloom_mod.probe(
-                    refs.drop("maybe_seen"), self.bloom, v["seen"]
-                )
-            else:
-                refs = ops.fetch_extract(
-                    fetchset,
-                    self.web_b,
-                    bloom=self.bloom if self.use_bloom else None,
-                    bloom_version=v["seen"],
-                )
-            refs = refs.persist()
+            refs = ops.fetch_extract(
+                fetchset, self.web_b, self.bloom, v["seen"]
+            ).persist()
 
             # seen gate (A7): ONLY maybe-seen rows are joined against
             # the seen table (bloom-negative rows are definitely new —
@@ -793,7 +685,6 @@ class SparkCrawler:
                 n = int(r["n"] or 0)
                 if n:
                     dedup_by_pid[int(r["partition_id"])] = n
-            self._prof("dedup-marked")
             for r in (
                 grouped.groupBy(pidc)
                 .agg(
@@ -812,14 +703,12 @@ class SparkCrawler:
             for pid, n in sorted(dedup_by_pid.items()):
                 hmetrics.append(("dedup", pid, "deduped", n))
                 hdelta["deduped"] += n
-            self._prof("dedup")
             fresh = grouped.select("url", "first.*")
             fresh = ops.with_host(fresh).persist()
             # materialize ONCE before three concurrent consumers fork —
             # a cold persisted frame hit by parallel jobs computes
             # per-job
-            fresh.count()
-            self._prof("fresh-materialize")
+            n_fresh = fresh.count()
 
             def images_branch():
                 """A14/A15/A16: decode + verify + phash + sink."""
@@ -861,10 +750,10 @@ class SparkCrawler:
                 # FETCH stage, not at schedule time.  It MUST complete
                 # before this wave's manifest commit: a committed
                 # manifest with missing shard bits would give the
-                # resume path bloom false negatives (SPEC-4).
-                if self.use_bloom:
-                    from spider_1_spark.engine import bloom as bloom_mod
-
+                # resume path bloom false negatives (SPEC-4).  An empty
+                # delta writes no version: load_shard falls back to the
+                # newest older one.
+                if n_fresh:
                     bloom_mod.update(
                         st.read_version("seen", v["seen"] + 1).select("url"),
                         self.bloom,
@@ -892,20 +781,14 @@ class SparkCrawler:
                         "replays it)"
                     ) from e
 
-            fut_images = _submit(
-                self._timed(self._branch(LAGGING_POOL, images_branch))
-            )
-            fut_seen = _submit(
-                self._timed(self._branch(CRITICAL_POOL, seen_branch))
-            )
+            fut_images = _submit(self._branch(LAGGING_POOL, images_branch))
+            fut_seen = _submit(self._branch(CRITICAL_POOL, seen_branch))
 
             def bloom_after_seen() -> None:
                 fut_seen.result()
                 bloom_branch()
 
-            fut_bloom = _submit(
-                self._timed(self._branch(LAGGING_POOL, bloom_after_seen))
-            )
+            fut_bloom = _submit(self._branch(LAGGING_POOL, bloom_after_seen))
             return {
                 "metrics": hmetrics,
                 "cdelta": hdelta,
@@ -957,7 +840,7 @@ class SparkCrawler:
                 "frontier",
                 v["frontier"] + 1,
                 nf.repartitionByRange(
-                    max(1, self._shuffle_partitions()),
+                    ops.shuffle_partitions(spark),
                     F.col("host_hash"),
                     F.col("url"),
                 ),
@@ -968,9 +851,7 @@ class SparkCrawler:
             # exactly this wave's deferred rows, so it closes from the
             # GATE alone; the fetch/decode stage moves to a pool
             # thread and overlaps the next wave's schedule+rank.
-            fut_harvest = pool.submit(
-                self._timed(self._branch(HARVEST_POOL, harvest_run))
-            )
+            fut_harvest = pool.submit(self._branch(HARVEST_POOL, harvest_run))
             rest, gate_rows = fut_gate.result()
             for _, pid, status, n in gate_rows:
                 cdelta[status] += n
@@ -1010,20 +891,18 @@ class SparkCrawler:
         )
         next_frontier = nf_plan.localCheckpoint(eager=False)
         fut_frontier = pool.submit(
-            self._timed(self._branch(LAGGING_POOL, frontier_branch)),
+            self._branch(LAGGING_POOL, frontier_branch),
             next_frontier,
         )
-        self._prof("gate-join")
 
         # --- join the branches the NEXT wave reads -------------------
         # (seen/bloom are NOT joined here: the next wave's harvest
         # waits on them via _fut_harvest before building its plans)
-        n_new = fut_hosts.result()
+        fut_hosts.result()
         # frontier emptiness from already-collected counters — the
         # next-frontier rows are EXACTLY fresh anchors + deferred, so
         # no job (and no wait on the lagging write) is needed
         frontier_empty = (n_anchor_next + cdelta["deferred"]) == 0
-        self._prof("critical-join")
         global_fetched = src["global_fetched"] + n_fetched
 
         return {
@@ -1036,7 +915,6 @@ class SparkCrawler:
             },
             "seq_next": src["seq_next"] + n_fetched,
             "global_fetched": global_fetched,
-            "n_hosts": (src.get("n_hosts") or 0) + n_new,
             "done": frontier_empty or global_fetched >= pol.global_page_budget,
             # in-memory next-frontier handoff (recomputes from frames
             # cached until this wave's commit, which runs after the
@@ -1106,7 +984,6 @@ class SparkCrawler:
             "versions": pending["versions"],
             "seq_next": pending["seq_next"],
             "global_fetched": pending["global_fetched"],
-            "n_hosts": pending.get("n_hosts"),
             "counters": counters,
             "done": pending["done"],
         }
@@ -1114,13 +991,9 @@ class SparkCrawler:
         for df in pending["_unpersist"] + H["unpersist"]:
             if df is not None:
                 _release_cached(df)
-        self._prof(f"w{wave} commit")
         return new_manifest
 
     # -------------------------------------------------------- helpers
-
-    def _shuffle_partitions(self) -> int:
-        return int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def _pcount_rows(self, df: DataFrame) -> list[tuple[int, int]]:
         """Per-partition row counts (A20) — pure, thread-safe."""

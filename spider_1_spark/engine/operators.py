@@ -12,10 +12,11 @@ Scale notes (the 100 TB / 10^10-URL design points, SURVEY §6):
   * per-host politeness ranks are computed with a SALTED two-phase
     window (A5): salt-local top-B first (bounded partitions even for a
     host holding 10^8 frontier rows), then an exact window over the
-    ≤ n_salts·B survivors per host;
+    ≤ N_SALTS·B survivors per host;
   * the global fetch sequence uses a two-phase range-partitioned rank
     (`with_global_rank`) instead of a single-partition Window — the
-    classic distributed zipWithIndex, O(P) driver state;
+    classic distributed zipWithIndex, O(P) driver state, applied as
+    one array-literal lookup per row at any partition count;
   * non-candidates never need a per-host rank at all: their
     dropped/deferred classification is a closed-form function of
     (t0, cap_h, F_h, G-cutoff key) derived in the module docstring of
@@ -26,14 +27,11 @@ Scale notes (the 100 TB / 10^10-URL design points, SURVEY §6):
 from __future__ import annotations
 
 import json
-import os
-import time
 from typing import Iterator
 
 import pandas as pd
 
-from pyspark import TaskContext
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,17 +46,21 @@ from spider_1_spark.reference_model.spider1_ref import image_id_of
 # tiebreak only (keys are unique by construction, see spider1_ref).
 KEY_COLS = ["depth", "parent_rank", "link_pos", "url"]
 
-def _prof(label: str) -> None:
-    """SPIDER1_PROFILE=1: timestamped marker around job boundaries."""
-    if os.environ.get("SPIDER1_PROFILE"):
-        print(f"[op-prof] {label}: @{time.time() % 10000:.1f}", flush=True)
-
+# salt sub-partitions per over-budget host in candidate_set's salted
+# window
+N_SALTS = 8
 
 # budgets up to this take the salted-window path in candidate_set;
 # larger budgets (where salting cannot shrink anything) take the
 # grouped two-phase rank.  Patchable so tests can force either path
 # on small fixtures.
 SALT_PATH_MAX_B = 4096
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: the task count
+    of every engine-owned shuffle (ranking, frontier, bloom update)."""
+    return max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
 
 
 # ------------------------------------------------------------------ A2
@@ -172,9 +174,7 @@ def fetch_robots(new_hosts: DataFrame, web_b, user_agent: str) -> DataFrame:
 
 # ------------------------------------------------------------------ A5+A9+A10
 
-def candidate_set(
-    allowed: DataFrame, policy, n_salts: int, num_partitions: int | None = None
-) -> DataFrame:
+def candidate_set(allowed: DataFrame, policy) -> DataFrame:
     """A5+A10: per-host fetch candidates = host-rank ≤ cap_h, skew-proof.
 
     ``allowed`` must carry ``t0`` (the host's pre-wave fetch total) and
@@ -188,9 +188,9 @@ def candidate_set(
     * **under-budget hosts** (frontier rows ≤ cap_h — the vast
       majority): every row is a candidate; NO ranking work at all.
     * **over-budget hosts** with a small budget (B ≤ 4096): salt
-      prefilter — a hot host's rows spread over ``n_salts``
+      prefilter — a hot host's rows spread over ``N_SALTS``
       sub-partitions, each yields its local top-cap_h, and only the
-      ≤ n_salts·cap_h survivors see the exact per-host window.  The
+      ≤ N_SALTS·cap_h survivors see the exact per-host window.  The
       per-host top-cap_h is a subset of the union of salt-local
       top-cap_h's, so this is exact.
     * **over-budget hosts with a huge budget** (B > 4096, where the
@@ -219,7 +219,7 @@ def candidate_set(
 
     if B <= SALT_PATH_MAX_B:
         over = over.withColumn(
-            "salt", F.pmod(F.xxhash64("url"), F.lit(n_salts))
+            "salt", F.pmod(F.xxhash64("url"), F.lit(N_SALTS))
         )
         w_salt = Window.partitionBy("host", "salt").orderBy(*KEY_COLS)
         over = (
@@ -234,14 +234,14 @@ def candidate_set(
             .drop("_hr")
         )
     else:
-        ranked = _grouped_topk(over, num_partitions)
+        ranked = _grouped_topk(over)
     res = under.unionByName(ranked)
     # surface _grouped_topk's cached frame so the wave can unpersist it
     res._aux_persist = getattr(ranked, "_rank_source", None)
     return res
 
 
-def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
+def _grouped_topk(over: DataFrame) -> DataFrame:
     """Exact per-host top-cap_h by KEY for over-budget hosts, with no
     per-host partition: two-phase distributed rank grouped by host.
 
@@ -253,13 +253,11 @@ def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
     other branch's partition count — data-embedded ids are immune.
     """
     spark = over.sparkSession
-    if num_partitions is None:
-        num_partitions = max(
-            1, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
     part = (
         over.repartitionByRange(
-            num_partitions, F.col("host"), *[F.col(c) for c in KEY_COLS]
+            shuffle_partitions(spark),
+            F.col("host"),
+            *[F.col(c) for c in KEY_COLS],
         )
         .sortWithinPartitions("host", *KEY_COLS)
         .withColumn("_pid", F.spark_partition_id())
@@ -287,7 +285,6 @@ def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
     # at local[16] (BENCH/BASELINE.md §3d) while being invisible at
     # local[4].  This job is also `part`'s single cache-materializing
     # job: everything downstream reads it warm.
-    _prof("grouped_topk stats-collect start")
     w_span = Window.partitionBy("host")
     stats = (
         per.withColumn("np", F.count("*").over(w_span))
@@ -295,7 +292,6 @@ def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
         .drop("np")
         .collect()
     )
-    _prof("grouped_topk stats-collect done")
     offsets: dict[tuple[int, str | None], int] = {}
     per_host: dict[str | None, int] = {}
     # None-safe sort key: nulls sort FIRST in the range partitioning,
@@ -366,7 +362,6 @@ def with_global_rank(
     spark: SparkSession,
     order_cols: list[str],
     out_col: str = "g",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """A9: dense 0-based global rank by ``order_cols`` — two-phase
     distributed zipWithIndex (SURVEY §4 "deterministic ordering is
@@ -382,14 +377,12 @@ def with_global_rank(
     candidate row through a Python worker once per wave; r2 profile
     showed the schedule+rank span flat at ~13 s across 4→16 cores).
     ``min(mid)`` is collected alongside the counts — same single tiny
-    job, and subtracting it avoids baking in the bit layout.  No
-    single-partition Window — this is the piece that survives a
-    10^10-row frontier.
+    job, and subtracting it avoids baking in the bit layout.  The
+    offsets reach the rows as one array literal indexed by partition id
+    (``element_at``), so the apply is the same expression at any
+    partition count.  No single-partition Window — this is the piece
+    that survives a 10^10-row frontier.
     """
-    if num_partitions is None:
-        num_partitions = max(
-            1, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
     # partition id + row id stored as COLUMNS at cache-materialization
     # time — NOT TaskContext.partitionId() at rank time, whose value
     # shifts if a later narrow stage pipelines this frame into a union
@@ -397,13 +390,14 @@ def with_global_rank(
     # deterministic: the range partitioning and the within-partition
     # sort fix each row's (partition, position).
     part = (
-        df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
+        df.repartitionByRange(
+            shuffle_partitions(spark), *[F.col(c) for c in order_cols]
+        )
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
     )
     part = part.persist()
-    _prof("global_rank counts-collect start")
     stats = {
         r["_pid"]: (r["cnt"], r["m0"], r["m1"])
         for r in part.groupBy("_pid")
@@ -414,9 +408,9 @@ def with_global_rank(
         )
         .collect()
     }
-    _prof("global_rank counts-collect done")
     acc = 0
-    offs: dict[int, int] = {}  # pid -> (global offset - min mid)
+    # offs[pid] = global offset - min mid (0 for pids with no rows)
+    offs = [0] * (max(stats, default=0) + 1)
     for pid in sorted(stats):
         cnt, m0, m1 = stats[pid]
         # The offset arithmetic requires monotonically_increasing_id's
@@ -436,27 +430,13 @@ def with_global_rank(
             )
         offs[pid] = acc - m0
         acc += cnt
-    if len(offs) <= 64:
-        # per-row linear when-chain: zero extra plan nodes, fine for
-        # sandbox partition counts
-        expr = F.lit(0)
-        base = [
-            F.when(F.col("_pid") == pid, F.lit(off))
-            for pid, off in offs.items()
-        ]
-        if base:
-            expr = F.coalesce(*base, F.lit(0))
-        ranked = part.withColumn(out_col, F.col("_mid") + expr)
-    else:
-        # thousands of partitions (cluster scale): broadcast-join a
-        # tiny offsets frame instead of compiling a P-branch CASE
-        off_df = spark.createDataFrame(
-            list(offs.items()), "_pid int, _goff long"
-        )
-        ranked = part.join(F.broadcast(off_df), "_pid", "left").withColumn(
-            out_col, F.col("_mid") + F.coalesce(F.col("_goff"), F.lit(0))
-        ).drop("_goff")
-    ranked = ranked.drop("_pid", "_mid")
+    # bigint: offsets are acc - (pid << 33), outside int32 for pid > 0.
+    # Non-null elements keep g non-nullable under ANSI mode, so the
+    # crawl log's seq column stays a required parquet field.
+    offsets_lit = F.lit(offs).cast(T.ArrayType(T.LongType(), False))
+    ranked = part.withColumn(
+        out_col, F.col("_mid") + F.element_at(offsets_lit, F.col("_pid") + 1)
+    ).drop("_pid", "_mid")
     ranked._rank_source = part  # handle for the caller to unpersist
     return ranked
 
@@ -469,8 +449,8 @@ REF_SCHEMA = (
 )
 
 
-def fetch_extract(fetchset: DataFrame, web_b, bloom=None,
-                  bloom_version: int = -1) -> DataFrame:
+def fetch_extract(fetchset: DataFrame, web_b, bloom,
+                  bloom_version: int) -> DataFrame:
     """A12+A13(+A2+A6): batched fetch + document-order ref extraction
     (SPEC-7), with per-ref RFC 3986 canonicalization (SPEC-2) and the
     bloom seen-probe fused into the SAME Arrow stage.
@@ -480,8 +460,7 @@ def fetch_extract(fetchset: DataFrame, web_b, bloom=None,
     and their shuffles were the wave's dominant cost.  Emits one row
     per ref with canonical URL, 0-based document position (= SPEC-3
     link_pos), verbatim ``alt`` caption, and ``maybe_seen`` from the
-    bloom shards (always True when bloom is disabled: every ref then
-    takes the exact-join path).  Pages that 404 emit nothing;
+    bloom shards at ``bloom_version``.  Pages that 404 emit nothing;
     non-http(s) refs are dropped here (canonicalize -> None, SPEC-7).
     """
     from spider_1_spark.engine import bloom as bloom_mod
@@ -508,12 +487,9 @@ def fetch_extract(fetchset: DataFrame, web_b, bloom=None,
                     "parent_depth", "seq", "pos", "kind", "url", "caption",
                 ],
             )
-            if bloom is None:
-                out["maybe_seen"] = True
-            else:
-                out["maybe_seen"] = bloom_mod.probe_pandas(
-                    out["url"], bloom, bloom_version, shard_cache
-                )
+            out["maybe_seen"] = bloom_mod.probe_pandas(
+                out["url"], bloom, bloom_version, shard_cache
+            )
             yield out
 
     return fetchset.select("url", "depth", "seq").mapInPandas(gen, REF_SCHEMA)

@@ -124,3 +124,51 @@ def test_manifest_commit_is_atomic_rename(spark):
         ], "no tmp residue after commit"
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
+    """Payload-free run_frontier at max_depth=0: every wave's seen
+    delta is empty (anchors lie beyond max_depth, there are no images),
+    so no wave calls bloom.update or writes a bloom version — only the
+    seed set's v=0 exists.  Stopping after wave 1 and resuming must
+    still match an uninterrupted run on every artifact: the probe at
+    each later seen version falls back to v=0."""
+    from spider_1_spark.engine import bloom
+    from spider_1_spark.fixtures.frontier_gen import frontier_frame
+
+    calls = []
+    update = bloom.update
+
+    def counted(df, store, prev_version, new_version):
+        calls.append((prev_version, new_version))
+        return update(df, store, prev_version, new_version)
+
+    monkeypatch.setattr(bloom, "update", counted)
+
+    n_hosts = 20
+    policy = Policy(
+        max_depth=0,
+        per_host_wave_budget=40,
+        per_host_total_cap=1 << 40,
+        global_page_budget=1 << 40,
+    )
+    web = SyntheticWeb(n_hosts, payload="none")
+    frame = frontier_frame(spark, 300, n_hosts)
+    roots = [tempfile.mkdtemp(prefix=f"spider1_{n}_") for n in ("full", "cut")]
+    try:
+        c1 = SparkCrawler(spark, policy, web, roots[0])
+        want = collect(c1.run_frontier(frame))
+        assert want[4] >= 3, "fixture must span several waves"
+        SparkCrawler(spark, policy, web, roots[1]).run_frontier(
+            frame, max_waves=1
+        )
+        c2 = SparkCrawler(spark, policy, web, roots[1])
+        assert collect(c2.resume()) == want
+        # one crawl-start update per run, none per wave
+        assert calls == [(-1, 0), (-1, 0)]
+        for c in (c1, c2):
+            assert c.store.read_manifest()["versions"]["seen"] == want[4]
+            assert os.listdir(c.bloom.base) == ["v=0"]
+    finally:
+        for root in roots:
+            shutil.rmtree(root, ignore_errors=True)

@@ -34,14 +34,14 @@ CONFIGS = {
 }
 
 
-def run_both(spark, name, **crawler_kwargs):
+def run_both(spark, name):
     n_hosts, n_seeds, policy = CONFIGS[name]
     web = SyntheticWeb(n_hosts)
     seeds = make_seeds(n_seeds, n_hosts)
     oracle = ref.crawl(seeds, policy, web)
     root = tempfile.mkdtemp(prefix=f"spider1_{name}_")
     try:
-        art = SparkCrawler(spark, policy, web, root, **crawler_kwargs).run(seeds)
+        art = SparkCrawler(spark, policy, web, root).run(seeds)
         yield_art = (
             sorted(
                 (r.seq, r.url, r.depth, r.parent_rank, r.link_pos, r.wave_id)
@@ -118,24 +118,19 @@ def test_wave_commit_releases_all_cached_blocks(spark):
     )
 
 
-def test_engine_matches_oracle_aligned_probe_path(spark):
-    """The standalone shard-ALIGNED bloom probe (bloom.probe — the
-    10^10-scale variant that bounds per-task sidecar I/O) must produce
-    the same bit-for-bit artifacts as the default fused probe."""
-    oracle, art = run_both(spark, "robots", aligned_probe=True)
-    check_equal(oracle, art)
-
-
 def test_engine_matches_oracle_hosts_shuffle_join_path(spark):
-    """hosts_broadcast_max=-1 forces the partitioned shuffle join for
-    the frontier⋈hosts enrichment from wave 0 — the auto-degrade path
-    the engine takes past 4M known hosts (crawler.py), which otherwise
-    never runs on test-size host counts (VERDICT r2 missing item 4).
-    -1, not 0: the manifest's host count starts at 0 and the broadcast
-    branch triggers on n_hosts_known <= max, so 0 would still
-    broadcast wave 0 (whose all-hosts-new join shape is exactly what
-    needs the shuffle-path coverage)."""
-    oracle, art = run_both(spark, "robots", hosts_broadcast_max=-1)
+    """autoBroadcastJoinThreshold=-1 forces the partitioned shuffle
+    join for the frontier⋈hosts enrichment from wave 0 — the plan
+    Spark picks once the hosts snapshot outgrows the threshold, which
+    otherwise never happens at test-size host counts (VERDICT r2
+    missing item 4)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        oracle, art = run_both(spark, "robots")
+    finally:
+        spark.conf.set(key, old)
     check_equal(oracle, art)
 
 
@@ -223,7 +218,9 @@ def test_grouped_topk_ranks_null_host_rows(spark):
         "host string, depth int, parent_rank long, link_pos int, "
         "url string, t0 int, cap_h long",
     )
-    out = _grouped_topk(df, 4)
+    # ranks over the session's 4 shuffle partitions (conftest)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
+    out = _grouped_topk(df)
     got = out.collect()
     out._rank_source.unpersist()
     by_host = {}
@@ -259,7 +256,9 @@ def test_grouped_topk_null_host_spans_partitions(spark):
         "host string, depth int, parent_rank long, link_pos int, "
         "url string, t0 int, cap_h long",
     )
-    out = _grouped_topk(df, 4)
+    # ranks over the session's 4 shuffle partitions (conftest)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
+    out = _grouped_topk(df)
     got = out.collect()
     out._rank_source.unpersist()
     by_host: dict = {}

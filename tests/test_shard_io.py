@@ -227,12 +227,9 @@ def test_update_streams_more_shards_than_tasks(spark, tmp_path):
     finally:
         spark.conf.set(key, old)
 
-    # zero false negatives at v1, via both probe paths
+    # zero false negatives at v1
     every = v0 + v1
     assert bloom.probe_pandas(pd.Series(every), store, 1, {}).all()
-    probed = bloom.probe(df(every), store, 1).collect()
-    assert len(probed) == len(every)
-    assert all(r["maybe_seen"] for r in probed)
 
     for version in (0, 1):
         inserted = v0 if version == 0 else v0 + v1
