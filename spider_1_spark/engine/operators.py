@@ -63,6 +63,17 @@ def shuffle_partitions(spark: SparkSession) -> int:
     return max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
 
 
+def partition_counts(df: DataFrame) -> list[tuple[int, int]]:
+    """Per-partition row counts (A20), one job: ``(partition_id, n)``
+    for every non-empty partition."""
+    return [
+        (int(r["partition_id"]), int(r["n"]))
+        for r in df.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+
+
 # ------------------------------------------------------------------ A2
 
 @F.pandas_udf(T.StringType())
@@ -88,12 +99,14 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 # ------------------------------------------------------------------ A1
 
-def ingest_seeds(spark: SparkSession, seeds: list[str]) -> tuple[DataFrame, int]:
+def ingest_seeds(
+    spark: SparkSession, seeds: list[str]
+) -> tuple[DataFrame, list[tuple[int, int]]]:
     """A1: ordered seed list → wave-0 frontier (SPEC-1/4).
 
-    Returns (frontier_df, deduped_count).  Seed index is explicit —
-    never ``monotonically_increasing_id`` (SURVEY §7 hard part 1).
-    First occurrence wins; duplicates count into ``deduped``.
+    Returns (frontier_df, per-partition duplicate counts).  Seed index
+    is explicit — never ``monotonically_increasing_id`` (SURVEY §7 hard
+    part 1).  First occurrence wins; duplicates count into ``deduped``.
     """
     raw = spark.createDataFrame(
         [(i, s) for i, s in enumerate(seeds)], "seed_rank long, raw_url string"
@@ -101,14 +114,18 @@ def ingest_seeds(spark: SparkSession, seeds: list[str]) -> tuple[DataFrame, int]
     return ingest_seed_frame(raw)
 
 
-def ingest_seed_frame(raw: DataFrame) -> tuple[DataFrame, int]:
-    """Distributed seed ingestion from a (seed_rank, raw_url) frame."""
+def ingest_seed_frame(
+    raw: DataFrame,
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """Distributed seed ingestion from a (seed_rank, raw_url) frame;
+    the duplicate counts come per partition of the dedup window, one
+    job."""
     df = raw.withColumn("url", canonicalize_udf(F.col("raw_url"))).filter(
         F.col("url").isNotNull()
     )
     w = Window.partitionBy("url").orderBy("seed_rank")
     df = df.withColumn("_rn", F.row_number().over(w))
-    deduped = df.filter(F.col("_rn") > 1).count()
+    dups = partition_counts(df.filter(F.col("_rn") > 1))
     df = df.filter(F.col("_rn") == 1).drop("_rn")
     frontier = with_host(df).select(
         "url",
@@ -120,7 +137,7 @@ def ingest_seed_frame(raw: DataFrame) -> tuple[DataFrame, int]:
         F.lit(0).alias("discovered_wave"),
         F.lit("PENDING").alias("state"),
     )
-    return frontier, int(deduped)
+    return frontier, dups
 
 
 # ------------------------------------------------------------------ A11

@@ -126,6 +126,26 @@ def test_manifest_commit_is_atomic_rename(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+class _WaveFault(RuntimeError):
+    pass
+
+
+def _payload_free_frontier(spark):
+    """The 3-wave payload-free run_frontier config of
+    test_frontier_resume_skips_empty_bloom_updates."""
+    from spider_1_spark.fixtures.frontier_gen import frontier_frame
+
+    n_hosts = 20
+    policy = Policy(
+        max_depth=0,
+        per_host_wave_budget=40,
+        per_host_total_cap=1 << 40,
+        global_page_budget=1 << 40,
+    )
+    web = SyntheticWeb(n_hosts, payload="none")
+    return policy, web, frontier_frame(spark, 300, n_hosts)
+
+
 def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
     """Payload-free run_frontier at max_depth=0: every wave's seen
     delta is empty (anchors lie beyond max_depth, there are no images),
@@ -134,7 +154,6 @@ def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
     still match an uninterrupted run on every artifact: the probe at
     each later seen version falls back to v=0."""
     from spider_1_spark.engine import bloom
-    from spider_1_spark.fixtures.frontier_gen import frontier_frame
 
     calls = []
     update = bloom.update
@@ -145,15 +164,7 @@ def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
 
     monkeypatch.setattr(bloom, "update", counted)
 
-    n_hosts = 20
-    policy = Policy(
-        max_depth=0,
-        per_host_wave_budget=40,
-        per_host_total_cap=1 << 40,
-        global_page_budget=1 << 40,
-    )
-    web = SyntheticWeb(n_hosts, payload="none")
-    frame = frontier_frame(spark, 300, n_hosts)
+    policy, web, frame = _payload_free_frontier(spark)
     roots = [tempfile.mkdtemp(prefix=f"spider1_{n}_") for n in ("full", "cut")]
     try:
         c1 = SparkCrawler(spark, policy, web, roots[0])
@@ -169,6 +180,67 @@ def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
         for c in (c1, c2):
             assert c.store.read_manifest()["versions"]["seen"] == want[4]
             assert os.listdir(c.bloom.base) == ["v=0"]
+    finally:
+        for root in roots:
+            shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("regime", ["anchor", "no_anchor"])
+def test_fetch_failure_drains_pools_and_resumes(spark, monkeypatch, regime):
+    """A fetch stage that raises on wave 1 must surface from the crawl
+    call, leave no wave pool thread alive, and leave state that a fresh
+    crawler resumes to the uninterrupted artifacts.  ``anchor`` (seed
+    crawl, max_depth 2) waits on the harvest inside the failing wave;
+    ``no_anchor`` (payload-free frontier, max_depth 0) only meets the
+    failure when the next wave's harvest or wave 1's commit joins it."""
+    import threading
+
+    from spider_1_spark.engine import operators as ops
+
+    if regime == "anchor":
+        policy, web = POLICY, SyntheticWeb(N_HOSTS)
+        seeds = make_seeds(N_SEEDS, N_HOSTS)
+
+        def crawl(c):
+            return c.run(seeds)
+    else:
+        policy, web, frame = _payload_free_frontier(spark)
+
+        def crawl(c):
+            return c.run_frontier(frame)
+
+    fetch_extract = ops.fetch_extract
+    armed = [True]
+
+    def failing(fetchset, web_b, bloom, seen_version):
+        # wave w probes the bloom at seen version w
+        if armed[0] and seen_version == 1:
+            raise _WaveFault("injected fetch failure on wave 1")
+        return fetch_extract(fetchset, web_b, bloom, seen_version)
+
+    monkeypatch.setattr(ops, "fetch_extract", failing)
+    roots = [tempfile.mkdtemp(prefix=f"spider1_{n}_") for n in ("full", "cut")]
+    try:
+        before = set(threading.enumerate())
+        with pytest.raises(_WaveFault):
+            crawl(SparkCrawler(spark, policy, web, roots[1]))
+        leaked = [
+            t
+            for t in threading.enumerate()
+            if t not in before
+            and t.name.startswith("ThreadPoolExecutor")
+            and t.is_alive()
+        ]
+        assert not leaked, f"wave pool threads still alive: {leaked}"
+        assert SparkCrawler(spark, policy, web, roots[1]).store.read_manifest()[
+            "wave_id"
+        ] < 1, "the failed wave must not commit"
+
+        armed[0] = False
+        want = collect(crawl(SparkCrawler(spark, policy, web, roots[0])))
+        assert want[4] >= 2, "wave 1 must exist"
+        got = collect(SparkCrawler(spark, policy, web, roots[1]).resume())
+        assert got == want
     finally:
         for root in roots:
             shutil.rmtree(root, ignore_errors=True)

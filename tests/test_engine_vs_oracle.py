@@ -13,7 +13,9 @@ Artifacts compared bit-for-bit per configuration:
 
 Configs chosen (tests/../scripts probe) to exercise every gate:
 ``tight_g`` hits mid-wave G exhaustion; ``robots`` hits robots_blocked,
-deferral, per-host caps and decode failures.
+deferral, per-host caps and decode failures; ``dup_seeds`` repeats seed
+URLs (seed-ingest ``deduped``); ``g_zero`` exhausts G before the first
+fetch.
 """
 
 from __future__ import annotations
@@ -31,6 +33,11 @@ CONFIGS = {
     # name: (n_hosts, n_seeds, policy)
     "tight_g": (8, 6, Policy(3, 2, 8, 11)),
     "robots": (12, 8, Policy(2, 1, 4, 30)),
+    # 12 seeds over 8 hosts repeat URLs: the seed-ingest dedup must
+    # reach the metrics rows as well as the counters
+    "dup_seeds": (8, 12, Policy(3, 2, 8, 11)),
+    # G = 0: one wave, every URL dropped before anything is fetched
+    "g_zero": (8, 4, Policy(2, 2, 5, 0)),
 }
 
 
