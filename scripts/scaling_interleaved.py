@@ -4,9 +4,9 @@ This VM's throughput drifts between half-hour regimes (±15-30% and a
 ~1.5x slow mode), so an efficiency ratio computed from legs run in
 different batches can be off by the regime delta alone.  This harness
 interleaves the lo and hi legs back-to-back inside each rep
-(lo, hi, lo, hi, ...), so every ratio is computed from adjacent runs
-and appends the same raw JSON lines to BENCH/scaling_raw.jsonl as
-scaling_bench.py (commit-tagged by bench.py).
+(lo, hi, lo, hi, ...), so every ratio is computed from adjacent runs,
+and appends one raw JSON line per leg to BENCH/scaling_raw.jsonl
+(commit-tagged by bench.py).
 
 Usage: python scripts/scaling_interleaved.py N_ROWS [reps=2] [lo=4] [hi=16]
 """

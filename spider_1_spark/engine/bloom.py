@@ -145,13 +145,28 @@ def _hashes(urls) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2
 
 
+def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
+    """(n, BLOOM_K) bit indices ``(h1 + i*h2) % m_bits`` — the one
+    place the double hashing is computed (uint64 wrap-around)."""
+    i = np.arange(BLOOM_K, dtype=np.uint64)
+    return (h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)
+
+
+def _bit_addresses(
+    h1: np.ndarray, h2: np.ndarray, m_bits: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Byte offset and bit-in-byte of each of the BLOOM_K positions,
+    shared by the probe and the update: two (n, BLOOM_K) int arrays."""
+    pos = _positions(h1, h2, m_bits)
+    return (pos >> np.uint64(3)).astype(np.int64), (pos & np.uint64(7)).astype(
+        np.int64
+    )
+
+
 def bit_positions(urls, m_bits: int) -> np.ndarray:
     """(n, BLOOM_K) bit indices in [0, m_bits)."""
     h1, h2 = _hashes(urls)
-    idx = np.empty((len(urls), BLOOM_K), dtype=np.uint64)
-    for i in range(BLOOM_K):
-        idx[:, i] = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
-    return idx
+    return _positions(h1, h2, m_bits)
 
 
 class BloomStore:
@@ -222,6 +237,7 @@ def probe_pandas(
     fused into the fetch/extract stage by operators.fetch_extract."""
     h1, h2 = _hashes(urls)
     shards = (h1 % np.uint64(bloom.n_shards)).astype(np.int64)
+    byte, bit = _bit_addresses(h1, h2, bloom.m_bits)
     hit = np.zeros(len(urls), dtype=bool)
     for shard in np.unique(shards):
         bm = shard_cache.get(int(shard))
@@ -229,13 +245,7 @@ def probe_pandas(
             bm = bloom.load_shard(version, int(shard))
             shard_cache[int(shard)] = bm
         sel = shards == shard
-        h = np.ones(int(sel.sum()), dtype=bool)
-        for i in range(BLOOM_K):
-            pos = (h1[sel] + np.uint64(i) * h2[sel]) % np.uint64(bloom.m_bits)
-            byte = (pos >> np.uint64(3)).astype(np.int64)
-            bit = (pos & np.uint64(7)).astype(np.int64)
-            h &= (bm[byte] >> bit) & 1 == 1
-        hit[sel] = h
+        hit[sel] = ((bm[byte[sel]] >> bit[sel]) & 1).all(axis=1)
     return hit
 
 
@@ -270,12 +280,10 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
                         yield pd.DataFrame({"shard": [shard], "n": [1]})
                     shard = int(s)
                     bm = bloom.load_shard(prev_version, shard).copy()
-                h1, h2 = _hashes(grp["url"])
-                for i in range(BLOOM_K):
-                    pos = (h1 + np.uint64(i) * h2) % np.uint64(bloom.m_bits)
-                    byte = (pos >> np.uint64(3)).astype(np.int64)
-                    bit = (pos & np.uint64(7)).astype(np.int64)
-                    np.bitwise_or.at(bm, byte, (1 << bit).astype(np.uint8))
+                byte, bit = _bit_addresses(*_hashes(grp["url"]), bloom.m_bits)
+                np.bitwise_or.at(
+                    bm, byte.ravel(), (1 << bit.ravel()).astype(np.uint8)
+                )
         if bm is not None:
             bloom.write_shard(new_version, shard, bm)
             yield pd.DataFrame({"shard": [shard], "n": [1]})

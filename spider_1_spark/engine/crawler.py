@@ -69,8 +69,9 @@ HARVEST_POOL = "harvest"  # overlapped fetch/decode stages (see below)
 LAGGING_POOL = "lagging"  # sink writes joined only at commit
 
 
-def _release_cached(df: DataFrame) -> None:
-    """Release a wave's cached frame COMPLETELY at commit.
+def _release_cached(df: DataFrame | None) -> None:
+    """Release a wave's cached frame COMPLETELY, at its commit or on a
+    crawl failure (None: nothing was cached).
 
     ``DataFrame.unpersist()`` only drops cache-manager entries; the RDD
     blocks of a ``localCheckpoint``'ed frame are not among them and
@@ -80,6 +81,8 @@ def _release_cached(df: DataFrame) -> None:
     directly.  Non-checkpointed frames pass through the plan probe
     harmlessly.
     """
+    if df is None:
+        return
     df.unpersist()
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -111,7 +114,6 @@ class _Harvest:
     fut_images: Future  # -> ("decode", pid, "decode_failed", n) rows
     fut_seen: Future  # seen delta durable
     fut_bloom: Future  # bloom shards durable
-    release: list[DataFrame]
 
 
 @dataclass
@@ -124,7 +126,7 @@ class _Wave:
     sinks: list[Future]  # crawl-log and frontier writes
     metrics: list[tuple]  # (stage, pid, counter_name, n)
     pool: ThreadPoolExecutor
-    release: list[DataFrame | None]  # cached frames freed after commit
+    release: list[DataFrame | None]  # every frame the wave cached
 
 
 class SparkCrawler:
@@ -245,16 +247,19 @@ class SparkCrawler:
         and the wave replays idempotently (SPEC-12;
         tests/test_checkpoint.py).
 
-        Each wave's thread pool is created here.  A failure anywhere
-        drains the uncommitted wave's pool and the failing wave's own,
-        so no branch thread is still writing files while the exception
-        unwinds (a caller that catches and resume()s would otherwise
-        race those writers against cleanup()'s pruning — ADVICE r1).
+        Each wave's thread pool and its list of cached frames are
+        created here; the wave's layers append every frame they cache.
+        A failure anywhere drains the uncommitted wave's pool and the
+        failing wave's own, so no branch thread is still writing files
+        while the exception unwinds (a caller that catches and
+        resume()s would otherwise race those writers against
+        cleanup()'s pruning — ADVICE r1), then releases both waves'
+        frames, as their commits would have.
         """
         waves_run = 0
         pending: _Wave | None = None  # critical path done, not committed
         latest = manifest  # last COMMITTED manifest
-        pool = None
+        pool, frames = None, []  # the wave whose critical path runs
         # the loop thread drives every critical-path job
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", CRITICAL_POOL
@@ -269,20 +274,20 @@ class SparkCrawler:
                 # gate and the bloom update on the seen write while
                 # holding a worker, so the pool stays above the live
                 # count or a queued dependency deadlocks it.
-                pool = ThreadPoolExecutor(max_workers=12)
-                wave = self._wave_critical(latest, pending, pool)
+                pool, frames = ThreadPoolExecutor(max_workers=12), []
+                wave = self._wave_critical(latest, pending, pool, frames)
                 waves_run += 1
                 if pending is not None:
                     latest = self._wave_commit(pending, latest)
-                pending, pool = wave, None
+                pending, pool, frames = wave, None, []
             if pending is not None:
                 latest = self._wave_commit(pending, latest)
-                # no next wave will consume the final handoff frame
-                _release_cached(pending.frontier)
         except BaseException:
             for p in (pending.pool if pending else None, pool):
                 if p is not None:
                     p.shutdown(wait=True)
+            for df in frames + (pending.release if pending else []):
+                _release_cached(df)
             raise
         return self.artifacts(latest)
 
@@ -330,11 +335,12 @@ class SparkCrawler:
             ) from e
 
     def _wave_critical(
-        self, latest: dict, handoff: _Wave | None, pool: ThreadPoolExecutor
+        self, latest: dict, handoff: _Wave | None, pool: ThreadPoolExecutor, frames
     ) -> _Wave:
         """Run the next wave up to (and including) the state snapshots
         the wave after it reads; its lagging branches are left in
-        ``pool`` for ``_wave_commit``.
+        ``pool`` for ``_wave_commit``.  Every frame the wave caches is
+        appended to ``frames`` as it is cached.
 
         ``handoff`` is the previous wave while it is not committed yet
         (its manifest, in-memory frontier and harvest); on wave 0 and
@@ -374,11 +380,11 @@ class SparkCrawler:
             frontier = handoff.frontier
         else:
             frontier = st.read_version("frontier", v["frontier"])
-        allowed, hosts_all, robots_rows, enrich_frames = self._enrich(
-            frontier, st.read_version("hosts", v["hosts"])
+        allowed, hosts_all, robots_rows = self._enrich(
+            frontier, st.read_version("hosts", v["hosts"]), frames
         )
-        fetchset, fetch_rows, no_anchor, post, rank_frames = self._schedule(
-            allowed, prev
+        fetchset, fetch_rows, no_anchor, post = self._schedule(
+            allowed, prev, frames
         )
         metrics = [tuple(r) for r in prev.get("ingest_metrics", ())]
         metrics += robots_rows + fetch_rows
@@ -401,8 +407,9 @@ class SparkCrawler:
         # the gate and the hosts snapshot; the gate's collect job
         # materializes it, and the hosts write waits on the gate
         fh = fetchset.groupBy("host").agg(F.count("*").alias("F_h")).persist()
+        frames.append(fh)
         fut_gate = self._submit(
-            pool, CRITICAL_POOL, self._gate, allowed, fetchset, fh, post
+            pool, CRITICAL_POOL, self._gate, allowed, fetchset, fh, post, frames
         )
         hosts_next = (
             hosts_all.join(fh, "host", "left")
@@ -428,7 +435,7 @@ class SparkCrawler:
         # cores).  Otherwise the next frontier needs `fresh`.
         fut_harvest = self._submit(
             pool, HARVEST_POOL if no_anchor else CRITICAL_POOL,
-            self._harvest, wave, v, fetchset, handoff, pool,
+            self._harvest, wave, v, fetchset, handoff, pool, frames,
         )
         rest, gate_rows = fut_gate.result()
         metrics += gate_rows
@@ -446,12 +453,14 @@ class SparkCrawler:
         # wave's plan into the next (geometric plan growth; the
         # optimizer/explain pass OOMs after ~8 waves).  The write
         # branch and the next wave's first job share the materialized
-        # blocks; released at the NEXT wave's commit (or the loop
-        # tail), and on block loss the recovery is resume-from-
-        # manifest, same as fetchset.  The parquet write LAGS: only the
-        # commit (and resume) reads it.  Explicit host-hash range
-        # partitioning (BASELINE.json:6 "explicit repartitionByRange").
+        # blocks; released at this wave's commit, which runs after the
+        # next wave's critical path has materialized its `fr`, and on
+        # block loss the recovery is resume-from-manifest, same as
+        # fetchset.  The parquet write LAGS: only the commit (and
+        # resume) reads it.  Explicit host-hash range partitioning
+        # (BASELINE.json:6 "explicit repartitionByRange").
         next_frontier = next_frontier.localCheckpoint(eager=False)
+        frames.append(next_frontier)
         fut_frontier = self._submit(
             pool, LAGGING_POOL, st.write_version, "frontier", v["frontier"] + 1,
             next_frontier.repartitionByRange(
@@ -481,22 +490,15 @@ class SparkCrawler:
             sinks=[fut_log, fut_frontier],
             metrics=metrics,
             pool=pool,
-            release=[
-                *enrich_frames, *rank_frames, fh, rest,
-                # the PREVIOUS wave's frontier handoff: fully consumed
-                # once this wave's fr is materialized and that wave's
-                # write has committed (ordered before this commit)
-                handoff.frontier if handoff is not None else None,
-            ],
+            release=frames,
         )
 
-    def _enrich(self, frontier: DataFrame, hosts: DataFrame):
+    def _enrich(self, frontier: DataFrame, hosts: DataFrame, frames: list):
         """A11/SPEC-6: hosts join, robots for new hosts, robots gate.
 
         Returns the robots-allowed rows (with ``t0``, the host's
         pre-wave fetch total), the hosts snapshot with this wave's new
-        hosts appended, the ``robots_blocked`` metrics rows and the
-        cached frames to release at commit.
+        hosts appended and the ``robots_blocked`` metrics rows.
         """
         pol = self.policy
         # ONE left join against the hosts table yields both the rules/t0
@@ -522,6 +524,7 @@ class SparkCrawler:
         new_host_rows = ops.fetch_robots(
             new_hosts, self.web_b, pol.user_agent
         ).persist()
+        frames.append(new_host_rows)
         nh = F.broadcast(
             new_host_rows.select(
                 "host",
@@ -553,6 +556,7 @@ class SparkCrawler:
         )
         fr = fr.withColumn("t0", F.coalesce(F.col("fetch_total"), F.lit(0)))
         fr = fr.persist()
+        frames.append(fr)
         # Materialize `fr` NOW with the robots-blocked partition count
         # (A20): ONE linear job before any other consumer exists.
         # Counting on a lagging branch concurrent with the rank chain's
@@ -574,22 +578,21 @@ class SparkCrawler:
         allowed = fr.filter(F.col("allowed")).drop(
             "rules_json", "fetch_total", "allowed", "state"
         )
-        return (
-            allowed, hosts.unionByName(new_host_rows), robots_rows,
-            [fr, new_host_rows],
-        )
+        return allowed, hosts.unionByName(new_host_rows), robots_rows
 
-    def _schedule(self, allowed: DataFrame, prev: dict):
+    def _schedule(self, allowed: DataFrame, prev: dict, frames: list):
         """A5+A9+A10: candidates, global rank and the G cutoff.
 
         Returns the fetchset (materialized), its per-partition
         ``fetched`` metrics rows, whether no fetched page can emit an
-        anchor, the gate's post-exhaustion predicate (module docstring:
-        key > K*) and the cached frames to release at commit.
+        anchor and the gate's post-exhaustion predicate (module
+        docstring: key > K*).
         """
         remaining = self.policy.global_page_budget - prev["global_fetched"]
         cand = ops.candidate_set(allowed, self.policy)
+        frames.append(getattr(cand, "_aux_persist", None))
         ranked = ops.with_global_rank(cand, self.spark, KEY, out_col="g")
+        frames.append(ranked._rank_source)
         # lazy localCheckpoint (not persist): every downstream branch
         # re-references this frame (anti-join, per-host agg, log write,
         # fetch stage), and the branches run from CONCURRENT driver
@@ -603,6 +606,7 @@ class SparkCrawler:
             .withColumn("seq", F.col("g") + F.lit(prev["seq_next"]))
             .localCheckpoint(eager=False)
         )
+        frames.append(fetchset)
         # ONE materializing job: per-partition fetched counts (A20),
         # the min depth (decides whether the wave can emit anchors) and
         # the last fetched key K* (the G gate's exhaustion point)
@@ -637,10 +641,11 @@ class SparkCrawler:
             post = F.struct(*KEY) > F.struct(
                 *[F.lit(kstar[c]).alias(c) for c in KEY]
             )
-        frames = [fetchset, ranked._rank_source, getattr(cand, "_aux_persist", None)]
-        return fetchset, fetch_rows, no_anchor, post, frames
+        return fetchset, fetch_rows, no_anchor, post
 
-    def _gate(self, allowed: DataFrame, fetchset: DataFrame, fh: DataFrame, post):
+    def _gate(
+        self, allowed: DataFrame, fetchset: DataFrame, fh: DataFrame, post, frames
+    ):
         """Closed-form dropped/deferred classification of the rows not
         fetched (module docstring) + per-partition gate metrics rows,
         one job; returns the persisted classified rows and the rows."""
@@ -670,6 +675,7 @@ class SparkCrawler:
             .when(f_eff >= F.lit(pol.per_host_wave_budget), "deferred")
             .otherwise("dropped"),
         ).persist()
+        frames.append(rest)
         rows = [
             ("gate", int(r["partition_id"]), r["status"], int(r["n"]))
             for r in rest.groupBy(
@@ -687,9 +693,20 @@ class SparkCrawler:
         fetchset: DataFrame,
         handoff: _Wave | None,
         pool: ThreadPoolExecutor,
+        frames: list,
     ) -> _Harvest:
         """A12–A18: fetch → extract → dedup, then the images, seen and
         bloom branches.
+
+        Each discovered URL is decided once (SPEC-4/7), in one
+        aggregate of the wave's refs grouped by URL.  An occurrence is
+        *eligible* if it is an image or an anchor within ``max_depth``.
+        A URL in the seen set counts every occurrence in ``deduped``;
+        an unseen URL with an eligible occurrence is fresh, its first
+        eligible occurrence by (seq, pos) enters the seen set and the
+        other eligible ones count; an unseen URL with only beyond-depth
+        anchors is silent.  The Bloom flag (A6) decides which URLs the
+        exact seen join (A7) looks at: a Bloom-negative URL is unseen.
 
         Cross-wave dependencies are waited HERE, not at wave entry:
         (a) the previous wave's bloom shard update must be durable
@@ -707,71 +724,53 @@ class SparkCrawler:
         seen = st.read_delta_union("seen", v["seen"])
 
         # --- A12/A13(+A2+A6): fused fetch+extract+canon+bloom -------
-        refs = ops.fetch_extract(fetchset, self.web_b, self.bloom, v["seen"]).persist()
-        # seen gate (A7): ONLY maybe-seen rows are joined against the
-        # seen table (bloom-negative rows are definitely new — zero
-        # false negatives by construction); a single left join serves
-        # both the dup counter and the new-ref filter.
-        maybe = refs.filter(F.col("maybe_seen")).drop("maybe_seen")
-        sure_new = refs.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        marked = maybe.join(
-            seen.select("url").withColumn("_seen", F.lit(True)), "url", "left"
-        ).persist()
-        dup_seen = marked.filter(F.col("_seen").isNotNull())
-        new_refs = sure_new.unionByName(
-            marked.filter(F.col("_seen").isNull()).drop("_seen")
+        refs = ops.fetch_extract(fetchset, self.web_b, self.bloom, v["seen"])
+        eligible = (F.col("kind") != "a") | (F.col("parent_depth") < pol.max_depth)
+        # A Bloom-negative beyond-depth anchor can be neither a dup nor
+        # fresh: it is dropped before the shuffle.  Hash aggregate
+        # (min_by, which skips the null ordering of ineligible rows):
+        # partial map-side combine collapses duplicate URLs before the
+        # shuffle.
+        first = F.struct("parent_depth", "seq", "pos", "kind", "caption")
+        by_url = refs.filter(F.col("maybe_seen") | eligible).groupBy("url").agg(
+            F.bool_or("maybe_seen").alias("maybe_seen"),
+            F.count("*").alias("n_all"),
+            F.count_if(eligible).alias("n_eligible"),
+            F.min_by(first, F.when(eligible, F.struct("seq", "pos"))).alias("first"),
         )
-        # beyond-max_depth anchors vanish silently BEFORE intra-wave
-        # dedup (oracle inserts nothing into seen for them — SPEC-7)
-        new_refs = new_refs.filter(
-            ~(
-                (F.col("kind") == "a")
-                & (F.col("parent_depth") + 1 > F.lit(pol.max_depth))
-            )
+        # the exact seen join (A7) matches Bloom-positive URLs only; a
+        # Bloom-negative URL is unseen (zero false negatives)
+        seen_urls = seen.select(F.col("url").alias("_seen"))
+        by_url = by_url.join(
+            seen_urls, F.col("maybe_seen") & (F.col("url") == F.col("_seen")), "left"
         )
-        # A8 intra-wave dedup: first discovery by (seq, pos) wins.  Hash
-        # aggregate (min_by) instead of a sort window: partial map-side
-        # combine collapses duplicate URLs before the shuffle — the
-        # sort-based row_number variant shuffled every ref.
-        grouped = new_refs.groupBy("url").agg(
-            F.min_by(
-                F.struct("parent_depth", "seq", "pos", "kind", "caption"),
-                F.struct("seq", "pos"),
-            ).alias("first"),
-            F.count("*").alias("n_occ"),
-        ).persist()
-        pidc = F.spark_partition_id().alias("partition_id")
-        # Two SEQUENTIAL linear jobs, not one union of branches: a
-        # union's concurrent map stages race the COLD refs/marked/
-        # grouped caches — 15-24x per-record CPU inflation at local[16]
-        # (§3d), and here the duplicated partition compute is the
-        # Python fetch/extract stage itself.  Job 1 scans `marked`
-        # (materializing refs + marked — the fetch stage runs exactly
-        # once); job 2 aggregates `grouped` in ONE scan yielding both
-        # the intra-wave dup counts and the next-wave anchor count —
-        # the latter (with the gate's deferred count) decides frontier
-        # emptiness WITHOUT waiting for the frontier parquet write.
-        dedup_by_pid: dict[int, int] = {}
-        for r in dup_seen.groupBy(pidc).agg(F.count("*").alias("n")).collect():
-            dedup_by_pid[int(r["partition_id"])] = int(r["n"])
-        n_anchor = 0
-        for r in (
-            grouped.groupBy(pidc)
-            .agg(
-                F.sum(F.col("n_occ") - 1).cast("long").alias("dups"),
-                F.sum(
-                    F.when(F.col("first.kind") == "a", 1).otherwise(0)
-                ).cast("long").alias("anchors"),
-            )
-            .collect()
-        ):
-            pid = int(r["partition_id"])
-            dedup_by_pid[pid] = dedup_by_pid.get(pid, 0) + int(r["dups"] or 0)
-            n_anchor += int(r["anchors"] or 0)
-        fresh = ops.with_host(grouped.select("url", "first.*")).persist()
+        is_seen = F.col("_seen").isNotNull()
+        is_fresh = ~is_seen & (F.col("n_eligible") > 0)
+        dups = F.when(is_seen, F.col("n_all")).when(is_fresh, F.col("n_eligible") - 1)
+        decided = by_url.select(
+            "url", "first.*", is_fresh.alias("fresh"), dups.otherwise(0).alias("dups")
+        )
+        # only fresh rows need a host: the seen delta and the anchors'
+        # next-frontier rows
+        is_new = F.col("fresh")
+        decided = ops.with_host(decided, F.when(is_new, F.col("url"))).persist()
+        frames.append(decided)
         # materialize ONCE before three concurrent consumers fork — a
-        # cold persisted frame hit by parallel jobs computes per-job
-        n_fresh = fresh.count()
+        # cold persisted frame hit by parallel jobs computes per-job.
+        # The same job sums the dups per partition and counts the fresh
+        # URLs, anchors (with the gate's deferred count they decide
+        # frontier emptiness without waiting on the frontier write)
+        # and images.
+        rows = decided.groupBy(F.spark_partition_id().alias("pid")).agg(
+            F.sum("dups").alias("dups"),
+            F.count_if(is_new).alias("fresh"),
+            F.count_if(is_new & (F.col("kind") == "a")).alias("anchors"),
+            F.count_if(is_new & (F.col("kind") == "img")).alias("images"),
+        ).collect()
+        n_fresh, n_anchor, n_img = (
+            sum(r[c] for r in rows) for c in ("fresh", "anchors", "images")
+        )
+        fresh = decided.filter(is_new)
 
         def write_seen() -> None:
             # delta write: only this wave's new URLs (append-only)
@@ -805,41 +804,43 @@ class SparkCrawler:
                     v["seen"] + 1,
                 )
 
-        fut_images = self._submit(pool, LAGGING_POOL, self._images, wave, fresh)
+        fut_images = self._submit(pool, LAGGING_POOL, self._images, wave, fresh, n_img)
         fut_seen = self._submit(pool, CRITICAL_POOL, write_seen)
         fut_bloom = self._submit(pool, LAGGING_POOL, update_bloom)
         return _Harvest(
             metrics=[
-                ("dedup", pid, "deduped", n)
-                for pid, n in sorted(dedup_by_pid.items())
-                if n
+                ("dedup", r["pid"], "deduped", r["dups"]) for r in rows if r["dups"]
             ],
             n_anchor=n_anchor,
             fresh=fresh,
             fut_images=fut_images,
             fut_seen=fut_seen,
             fut_bloom=fut_bloom,
-            release=[refs, marked, grouped, fresh],
         )
 
-    def _images(self, wave: int, fresh: DataFrame) -> list[tuple]:
+    def _images(self, wave: int, fresh: DataFrame, n_img: int) -> list[tuple]:
         """A14/A15/A16: decode + verify + phash + images sink; returns
-        the ``decode_failed`` metrics rows."""
+        the ``decode_failed`` metrics rows.  A wave without a fresh
+        image runs no job and writes no images file."""
+        if not n_img:
+            return []
         decoded = ops.decode_images(
             fresh.filter(F.col("kind") == "img"), self.web_b
         ).persist()
-        rows = [
-            ("decode", pid, "decode_failed", n)
-            for pid, n in ops.partition_counts(decoded.filter(~F.col("ok")))
-        ]
-        self.store.write_wave(
-            "images",
-            wave,
-            decoded.filter(F.col("ok")).select(
-                "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-            ),
-        )
-        decoded.unpersist()
+        try:
+            rows = [
+                ("decode", pid, "decode_failed", n)
+                for pid, n in ops.partition_counts(decoded.filter(~F.col("ok")))
+            ]
+            self.store.write_wave(
+                "images",
+                wave,
+                decoded.filter(F.col("ok")).select(
+                    "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
+                ),
+            )
+        finally:
+            decoded.unpersist()
         return rows
 
     @staticmethod
@@ -903,9 +904,8 @@ class SparkCrawler:
             counters[name] += n
         manifest = {**w.manifest, "counters": counters}
         st.commit(manifest)
-        for df in w.release + h.release:
-            if df is not None:
-                _release_cached(df)
+        for df in w.release:
+            _release_cached(df)
         return manifest
 
     # -------------------------------------------------------- helpers

@@ -90,11 +90,13 @@ def host_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: host_of(u) if u is not None else None)
 
 
-def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """A3+A4: host + stable 64-bit host hash for partitioning."""
-    return df.withColumn("host", host_udf(F.col(url_col))).withColumn(
-        "host_hash", F.xxhash64("host")
-    )
+def with_host(df: DataFrame, url=None) -> DataFrame:
+    """A3+A4: host + stable 64-bit host hash for partitioning, of the
+    ``url`` column or of the ``url`` expression (null where no row
+    needs a host)."""
+    return df.withColumn(
+        "host", host_udf(F.col("url") if url is None else url)
+    ).withColumn("host_hash", F.xxhash64("host"))
 
 
 # ------------------------------------------------------------------ A1

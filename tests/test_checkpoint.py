@@ -188,9 +188,10 @@ def test_frontier_resume_skips_empty_bloom_updates(spark, monkeypatch):
 @pytest.mark.parametrize("regime", ["anchor", "no_anchor"])
 def test_fetch_failure_drains_pools_and_resumes(spark, monkeypatch, regime):
     """A fetch stage that raises on wave 1 must surface from the crawl
-    call, leave no wave pool thread alive, and leave state that a fresh
-    crawler resumes to the uninterrupted artifacts.  ``anchor`` (seed
-    crawl, max_depth 2) waits on the harvest inside the failing wave;
+    call, leave no wave pool thread alive, release every frame the
+    uncommitted waves cached, and leave state that a fresh crawler
+    resumes to the uninterrupted artifacts.  ``anchor`` (seed crawl,
+    max_depth 2) waits on the harvest inside the failing wave;
     ``no_anchor`` (payload-free frontier, max_depth 0) only meets the
     failure when the next wave's harvest or wave 1's commit joins it."""
     import threading
@@ -222,8 +223,12 @@ def test_fetch_failure_drains_pools_and_resumes(spark, monkeypatch, regime):
     roots = [tempfile.mkdtemp(prefix=f"spider1_{n}_") for n in ("full", "cut")]
     try:
         before = set(threading.enumerate())
+        jsc = spark.sparkContext._jsc.sc()
+        n_cached = jsc.getPersistentRDDs().size()
         with pytest.raises(_WaveFault):
             crawl(SparkCrawler(spark, policy, web, roots[1]))
+        n_leaked = jsc.getPersistentRDDs().size() - n_cached
+        assert n_leaked <= 0, f"failed crawl left {n_leaked} cached RDD(s)"
         leaked = [
             t
             for t in threading.enumerate()
