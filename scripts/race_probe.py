@@ -23,7 +23,7 @@ class), then all cores churning in broadcast-hash-join probes
 interleaved with cache-unroll memory traffic.  This is the evidence
 behind the wave-loop rule "materialize each cached frame with ONE
 linear job before any concurrent consumer" (engine/crawler.py,
-engine/operators._grouped_topk).
+engine/operators.with_global_rank).
 
 Usage: python scripts/race_probe.py CPUS   # prints one JSON line/variant
 """

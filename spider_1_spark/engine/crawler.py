@@ -33,7 +33,8 @@ key:
   (SPEC-5), which keeps the global ordering stable.
 
 This closed form is what lets a 1000-executor cluster reproduce a
-single-process crawl: per-host ranks come from salted windows
+single-process crawl: per-host ranks come from salted windows, or
+for budgets too large to salt from a global rank over (host, KEY)
 (operators.candidate_set), the global rank from a two-phase
 zipWithIndex (operators.with_global_rank), and everything else is
 joins + column expressions — no sequential scan anywhere.
@@ -543,10 +544,11 @@ class SparkCrawler:
             )
             .drop("_rj", "_ft")
         )
-        # allow-all hosts (rules_json "[]") short-circuit JVM-side; the
-        # rule-match UDF output is only consulted for hosts with real
-        # rules.  (A two-branch union was tried and reverted: it scans
-        # the frontier twice, which costs more than the vectorized UDF.)
+        # allow-all hosts (rules_json "[]") take the CASE's JVM branch,
+        # but Spark plans the UDF as an ArrowEvalPython node BELOW the
+        # CASE, so every frontier row still crosses to Python; the UDF
+        # passes rule-less rows through as allowed.  (A two-branch union
+        # was tried and reverted: it scans the frontier twice.)
         no_rules = F.col("rules_json").isNull() | (F.col("rules_json") == "[]")
         fr = fr.withColumn(
             "allowed",
@@ -589,10 +591,10 @@ class SparkCrawler:
         docstring: key > K*).
         """
         remaining = self.policy.global_page_budget - prev["global_fetched"]
-        cand = ops.candidate_set(allowed, self.policy)
-        frames.append(getattr(cand, "_aux_persist", None))
-        ranked = ops.with_global_rank(cand, self.spark, KEY, out_col="g")
-        frames.append(ranked._rank_source)
+        cand, cached = ops.candidate_set(allowed, self.policy)
+        frames.append(cached)
+        ranked, cached = ops.with_global_rank(cand, KEY, out_col="g")
+        frames.append(cached)
         # lazy localCheckpoint (not persist): every downstream branch
         # re-references this frame (anti-join, per-host agg, log write,
         # fetch stage), and the branches run from CONCURRENT driver
@@ -750,10 +752,8 @@ class SparkCrawler:
         decided = by_url.select(
             "url", "first.*", is_fresh.alias("fresh"), dups.otherwise(0).alias("dups")
         )
-        # only fresh rows need a host: the seen delta and the anchors'
-        # next-frontier rows
         is_new = F.col("fresh")
-        decided = ops.with_host(decided, F.when(is_new, F.col("url"))).persist()
+        decided = ops.with_host(decided).persist()
         frames.append(decided)
         # materialize ONCE before three concurrent consumers fork — a
         # cold persisted frame hit by parallel jobs computes per-job.

@@ -12,7 +12,8 @@ Scale notes (the 100 TB / 10^10-URL design points, SURVEY §6):
   * per-host politeness ranks are computed with a SALTED two-phase
     window (A5): salt-local top-B first (bounded partitions even for a
     host holding 10^8 frontier rows), then an exact window over the
-    ≤ N_SALTS·B survivors per host;
+    ≤ N_SALTS·B survivors per host; budgets too large to salt take the
+    global rank over (host, KEY) instead (see ``_grouped_topk``);
   * the global fetch sequence uses a two-phase range-partitioned rank
     (`with_global_rank`) instead of a single-partition Window — the
     classic distributed zipWithIndex, O(P) driver state, applied as
@@ -39,7 +40,7 @@ from spider_1_spark.functions import robots as robots_mod
 from spider_1_spark.functions.codecs import DecodeError, decode
 from spider_1_spark.functions.extract import extract_refs
 from spider_1_spark.functions.phash import dhash64
-from spider_1_spark.functions.urlnorm import canonicalize, host_of
+from spider_1_spark.functions.urlnorm import canonicalize
 from spider_1_spark.reference_model.spider1_ref import image_id_of
 
 # sort key shared by every ordering decision (SPEC-3); url is a
@@ -84,18 +85,16 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 
 # ------------------------------------------------------------------ A3/A4
 
-@F.pandas_udf(T.StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    """A3: host (netloc) of an already-canonical URL."""
-    return urls.map(lambda u: host_of(u) if u is not None else None)
+# the authority of a canonical URL: everything between "://" and the
+# first "/", "?" or "#" — what ``urlnorm.host_of`` returns, JVM-side
+# (property-tested against it in tests/test_properties.py)
+_HOST_RE = r"^[^:]+://([^/?#]*)"
 
 
-def with_host(df: DataFrame, url=None) -> DataFrame:
-    """A3+A4: host + stable 64-bit host hash for partitioning, of the
-    ``url`` column or of the ``url`` expression (null where no row
-    needs a host)."""
+def with_host(df: DataFrame) -> DataFrame:
+    """A3+A4: host + stable 64-bit host hash for partitioning."""
     return df.withColumn(
-        "host", host_udf(F.col("url") if url is None else url)
+        "host", F.regexp_extract("url", _HOST_RE, 1)
     ).withColumn("host_hash", F.xxhash64("host"))
 
 
@@ -193,13 +192,18 @@ def fetch_robots(new_hosts: DataFrame, web_b, user_agent: str) -> DataFrame:
 
 # ------------------------------------------------------------------ A5+A9+A10
 
-def candidate_set(allowed: DataFrame, policy) -> DataFrame:
+def candidate_set(
+    allowed: DataFrame, policy
+) -> tuple[DataFrame, DataFrame | None]:
     """A5+A10: per-host fetch candidates = host-rank ≤ cap_h, skew-proof.
 
     ``allowed`` must carry ``t0`` (the host's pre-wave fetch total) and
     the KEY_COLS.  cap_h = max(0, min(B, C - t0)) — the closed form of
     the oracle's sequential C-then-B gating for the fetched prefix
     (derivation in crawler.py docstring).
+
+    Returns ``(candidates, cached)``: the grouped path's persisted
+    frame (None on the salted path), for the caller to release.
 
     Skew strategy (A5, BASELINE.json:6 "salting of hot domains"), by
     host class:
@@ -213,15 +217,13 @@ def candidate_set(allowed: DataFrame, policy) -> DataFrame:
       per-host top-cap_h is a subset of the union of salt-local
       top-cap_h's, so this is exact.
     * **over-budget hosts with a huge budget** (B > 4096, where the
-      salt prefilter cannot shrink anything): grouped two-phase rank —
-      range-partition on (host, KEY) so ONE host legally spans MANY
-      partitions, sort within partitions, then per-(partition, host)
-      counts give each host's cross-partition rank offsets.  No
+      salt prefilter cannot shrink anything): the global rank over
+      (host, KEY), which range-partitions so ONE host legally spans
+      MANY partitions; a row's rank within its host is its global rank
+      minus its host's first one (see _grouped_topk).  No
       single-partition window ever sees a whole hot host, so a host
       holding 19% of a 10^10-row frontier still ranks at full cluster
-      parallelism.  The offsets collect is O(P) by construction: only
-      boundary-spanning hosts (≤ P-1 of them) need offsets at all
-      (see _grouped_topk).
+      parallelism, and the driver holds O(P) state.
     """
     B, C = policy.per_host_wave_budget, policy.per_host_total_cap
     df = allowed.withColumn(
@@ -236,155 +238,60 @@ def candidate_set(allowed: DataFrame, policy) -> DataFrame:
     under = df.filter(F.col("_hc") <= F.col("cap_h")).drop("_hc")
     over = df.filter(F.col("_hc") > F.col("cap_h")).drop("_hc")
 
-    if B <= SALT_PATH_MAX_B:
-        over = over.withColumn(
-            "salt", F.pmod(F.xxhash64("url"), F.lit(N_SALTS))
-        )
-        w_salt = Window.partitionBy("host", "salt").orderBy(*KEY_COLS)
-        over = (
-            over.withColumn("_sr", F.row_number().over(w_salt))
-            .filter(F.col("_sr") <= F.col("cap_h"))
-            .drop("_sr", "salt")
-        )
-        w_host = Window.partitionBy("host").orderBy(*KEY_COLS)
-        ranked = (
-            over.withColumn("_hr", F.row_number().over(w_host))
-            .filter(F.col("_hr") <= F.col("cap_h"))
-            .drop("_hr")
-        )
-    else:
-        ranked = _grouped_topk(over)
-    res = under.unionByName(ranked)
-    # surface _grouped_topk's cached frame so the wave can unpersist it
-    res._aux_persist = getattr(ranked, "_rank_source", None)
-    return res
+    if B > SALT_PATH_MAX_B:
+        ranked, cached = _grouped_topk(over)
+        return under.unionByName(ranked), cached
+    over = over.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(N_SALTS)))
+    w_salt = Window.partitionBy("host", "salt").orderBy(*KEY_COLS)
+    over = (
+        over.withColumn("_sr", F.row_number().over(w_salt))
+        .filter(F.col("_sr") <= F.col("cap_h"))
+        .drop("_sr", "salt")
+    )
+    w_host = Window.partitionBy("host").orderBy(*KEY_COLS)
+    ranked = (
+        over.withColumn("_hr", F.row_number().over(w_host))
+        .filter(F.col("_hr") <= F.col("cap_h"))
+        .drop("_hr")
+    )
+    return under.unionByName(ranked), None
 
 
-def _grouped_topk(over: DataFrame) -> DataFrame:
+def _grouped_topk(over: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Exact per-host top-cap_h by KEY for over-budget hosts, with no
-    per-host partition: two-phase distributed rank grouped by host.
+    per-host partition; ``(top, cached)`` as from with_global_rank.
 
-    The partition id is STORED AS A COLUMN at cache-materialization
-    time rather than read from ``TaskContext.partitionId()`` at rank
-    time: a later narrow stage may pipeline this frame into a union
-    (candidate_set unions it with the under-budget rows), and the
-    task's partition index inside a union stage is shifted by the
-    other branch's partition count — data-embedded ids are immune.
+    The global rank ``_gr`` over (host, KEY) lays each host's rows out
+    contiguously, so a row's 0-based rank within its host is ``_gr``
+    minus the smallest ``_gr`` of its host.  That minimum comes from a
+    per-host aggregate joined back null-safely: a null host is a legal
+    group and sorts first, like any other.  The aggregate has one row
+    per over-budget host, at most N/(B+1) rows but not bounded by P, so
+    the planner — not a hint — decides whether to broadcast it.
     """
-    spark = over.sparkSession
-    part = (
-        over.repartitionByRange(
-            shuffle_partitions(spark),
-            F.col("host"),
-            *[F.col(c) for c in KEY_COLS],
-        )
-        .sortWithinPartitions("host", *KEY_COLS)
-        .withColumn("_pid", F.spark_partition_id())
+    # the rank's stats job has materialized the cache, so the aggregate
+    # and the join's other side read it warm (BENCH/BASELINE.md §3d)
+    ranked, cached = _global_rank(over, ["host", *KEY_COLS], "_gr")
+    first = ranked.groupBy(F.col("host").alias("_h")).agg(
+        F.min("_gr").alias("_g0")
     )
-    # persist (not localCheckpoint — its RDD blocks would survive
-    # DataFrame.unpersist() at wave commit, ADVICE r1); per-wave
-    # lineage is bounded anyway by the parquet snapshot boundaries.
-    part = part.persist()
-    # Driver state is HARD-BOUNDED at O(P): only hosts that SPAN a
-    # partition boundary need cross-partition rank offsets, and a
-    # range partitioning by (host, KEY) puts at most one spanning host
-    # on each of the P-1 boundaries.  Single-partition hosts rank
-    # locally from zero, and every row carries its own cap in the
-    # cap_h column — so nothing per-host is collected or broadcast
-    # (ADVICE r1: the (pid, host) dict could reach millions of entries
-    # at the 10^10-row design point; this collect is ≤ 2P rows by
-    # construction, at ANY host count).
-    per = part.groupBy("_pid", "host").agg(F.count("*").alias("cnt"))
-    # Spanning-host filter as a window over the TINY per frame: ONE
-    # linear job (scan part → agg → reshuffle ≤(hosts+P) rows →
-    # window → collect).  The r1 shape — per ⋈ broadcast(spanning) —
-    # put the broadcast-build stage and the probe stage of the SAME
-    # job onto the COLD `part`/input caches concurrently; racing a
-    # cold cached frame measured 15-24x per-record JVM-CPU inflation
-    # at local[16] (BENCH/BASELINE.md §3d) while being invisible at
-    # local[4].  This job is also `part`'s single cache-materializing
-    # job: everything downstream reads it warm.
-    w_span = Window.partitionBy("host")
-    stats = (
-        per.withColumn("np", F.count("*").over(w_span))
-        .filter(F.col("np") > 1)
-        .drop("np")
-        .collect()
+    top = (
+        ranked.join(first, F.col("host").eqNullSafe(F.col("_h")))
+        .filter(F.col("_gr") - F.col("_g0") < F.col("cap_h"))
+        .drop("_gr", "_h", "_g0")
     )
-    offsets: dict[tuple[int, str | None], int] = {}
-    per_host: dict[str | None, int] = {}
-    # None-safe sort key: nulls sort FIRST in the range partitioning,
-    # so a large unparseable-URL population straddles the first
-    # partition boundary and lands in `stats` as host=None alongside
-    # str hosts — a bare (host, pid) key would raise TypeError on the
-    # None-vs-str compare and kill the whole grouped-topk query
-    # (ADVICE r4).
-    for r in sorted(
-        stats,
-        key=lambda r: (r["host"] is not None, r["host"] or "", r["_pid"]),
-    ):
-        offsets[(r["_pid"], r["host"])] = per_host.get(r["host"], 0)
-        per_host[r["host"]] = per_host.get(r["host"], 0) + r["cnt"]
-    off_b = spark.sparkContext.broadcast(offsets)
-
-    def keep_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized gate (r4; the per-row zip loop was the hottest
-        # remaining Python loop, VERDICT r3 item 3): a row's global
-        # rank within its host is  cross-partition offset (offs)
-        #   + rows seen in EARLIER batches of this task (carry)
-        #   + 0-based position within this batch (groupby cumcount),
-        # all three computed group-at-a-time; only the tiny per-group
-        # dict updates stay in Python (O(hosts-in-batch), not O(rows)).
-        import numpy as np
-
-        offs = off_b.value
-        carry: dict[tuple[int, object], int] = {}
-
-        def norm(h):  # None/NaN host -> None, matching the collected
-            return None if pd.isna(h) else h  # stats rows' key shape
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # dropna=False: a null host is a legal group (host_udf
-            # emits None for unparseable urls) — the default dropna
-            # would silently FILTER those rows out instead of ranking
-            # them (r4 review finding).  ngroup+array indexing (not a
-            # merge) because pandas merge never matches NaN keys.
-            g = pdf.groupby(["_pid", "host"], sort=False, dropna=False)
-            local = g.cumcount().to_numpy()
-            codes = g.ngroup().to_numpy()
-            sizes = g.size()  # index: (pid, host), group order = ngroup
-            group_base = np.fromiter(
-                (
-                    offs.get((int(p), norm(h)), 0)
-                    + carry.get((int(p), norm(h)), 0)
-                    for p, h in sizes.index
-                ),
-                dtype=np.int64,
-                count=len(sizes),
-            )
-            base = group_base[codes]
-            mask = (base + local) < pdf["cap_h"].to_numpy()
-            yield pdf[pd.Series(mask, index=pdf.index)]
-            for (p, h), sz in sizes.items():
-                k = (int(p), norm(h))
-                carry[k] = carry.get(k, 0) + int(sz)
-
-    out = part.mapInPandas(keep_topk, part.schema).drop("_pid")
-    out._rank_source = part  # caller may unpersist
-    return out
+    return top, cached
 
 
 def with_global_rank(
-    df: DataFrame,
-    spark: SparkSession,
-    order_cols: list[str],
-    out_col: str = "g",
-) -> DataFrame:
+    df: DataFrame, order_cols: list[str], out_col: str = "g"
+) -> tuple[DataFrame, DataFrame]:
     """A9: dense 0-based global rank by ``order_cols`` — two-phase
     distributed zipWithIndex (SURVEY §4 "deterministic ordering is
     engine-owned").
+
+    Returns ``(ranked, cached)``: the persisted sorted frame, for the
+    caller to release once ``ranked`` is consumed.
 
     Phase 1 range-partitions + sorts; phase 2 counts rows per partition
     (one tiny job, O(P) driver state) and adds ``offset + local_index``
@@ -392,30 +299,28 @@ def with_global_rank(
     sorted partitions is ``(pid << 33) + row_index`` with a CONSECUTIVE
     0-based row index per partition, so
     ``g = global_offset[pid] + (mid - min_mid[pid])`` — no Python/Arrow
-    crossing (the previous mapInPandas pass round-tripped every
-    candidate row through a Python worker once per wave; r2 profile
-    showed the schedule+rank span flat at ~13 s across 4→16 cores).
-    ``min(mid)`` is collected alongside the counts — same single tiny
-    job, and subtracting it avoids baking in the bit layout.  The
-    offsets reach the rows as one array literal indexed by partition id
-    (``element_at``), so the apply is the same expression at any
-    partition count.  No single-partition Window — this is the piece
-    that survives a 10^10-row frontier.
+    crossing; ``min(mid)`` rides the same job and spares baking in the
+    bit layout.  The offsets reach the rows as one array literal
+    indexed by partition id (``element_at``), the same expression at
+    any partition count.  No single-partition Window — this is the
+    piece that survives a 10^10-row frontier.
     """
     # partition id + row id stored as COLUMNS at cache-materialization
-    # time — NOT TaskContext.partitionId() at rank time, whose value
-    # shifts if a later narrow stage pipelines this frame into a union
-    # (see _grouped_topk docstring for the failure mode).  Both are
-    # deterministic: the range partitioning and the within-partition
-    # sort fix each row's (partition, position).
+    # time — NOT TaskContext.partitionId() at rank time: inside a union
+    # stage (candidate_set unions the grouped top-k with the
+    # under-budget rows) a task's partition index is shifted by the
+    # other branch's partition count.  Both are deterministic: the
+    # range partitioning and the sort fix each row's position.
     part = (
         df.repartitionByRange(
-            shuffle_partitions(spark), *[F.col(c) for c in order_cols]
+            shuffle_partitions(df.sparkSession),
+            *[F.col(c) for c in order_cols],
         )
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
     )
+    # persist: a localCheckpoint's RDD blocks would survive unpersist()
     part = part.persist()
     stats = {
         r["_pid"]: (r["cnt"], r["m0"], r["m1"])
@@ -456,8 +361,12 @@ def with_global_rank(
     ranked = part.withColumn(
         out_col, F.col("_mid") + F.element_at(offsets_lit, F.col("_pid") + 1)
     ).drop("_pid", "_mid")
-    ranked._rank_source = part  # handle for the caller to unpersist
-    return ranked
+    return ranked, part
+
+
+# _grouped_topk ranks through this private name, so a wrapper installed
+# on the public one (perfbench's tracer) counts each ranking call once.
+_global_rank = with_global_rank
 
 
 # ------------------------------------------------------------------ A12+A13

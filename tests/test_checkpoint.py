@@ -109,6 +109,33 @@ def test_crash_residue_rolled_back(spark, oracle):
         shutil.rmtree(root, ignore_errors=True)
 
 
+@pytest.mark.parametrize("salt_max_b", [4096, 0], ids=["salted", "grouped"])
+def test_crawl_log_seq_is_a_required_parquet_field(spark, monkeypatch, salt_max_b):
+    """The crawl log's seq is the global rank's non-nullable g plus an
+    offset, so parquet stores it as a REQUIRED field (max definition
+    level 0) whichever per-host ranking path the wave took."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from spider_1_spark.engine import operators as ops
+
+    monkeypatch.setattr(ops, "SALT_PATH_MAX_B", salt_max_b)
+    root = tempfile.mkdtemp(prefix="spider1_seq_")
+    try:
+        SparkCrawler(spark, POLICY, SyntheticWeb(N_HOSTS), root).run(
+            make_seeds(N_SEEDS, N_HOSTS), max_waves=1
+        )
+        files = glob.glob(os.path.join(root, "crawl_log", "w=0", "*.parquet"))
+        assert files
+        for f in files:
+            schema = pq.ParquetFile(f).schema
+            seq = schema.column(schema.names.index("seq"))
+            assert seq.max_definition_level == 0, f
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_manifest_commit_is_atomic_rename(spark):
     """The manifest file is always complete JSON (tmp+os.replace)."""
     root = tempfile.mkdtemp(prefix="spider1_manifest_")

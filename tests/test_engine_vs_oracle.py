@@ -110,6 +110,24 @@ def test_engine_matches_oracle_grouped_rank_path(spark, name, monkeypatch):
     check_equal(oracle, art)
 
 
+def test_engine_matches_oracle_grouped_rank_shuffle_join(spark, monkeypatch):
+    """The grouped path joins each over-budget row to its host's first
+    global rank; with autoBroadcastJoinThreshold=-1 that join (and the
+    null-safe key it runs on) takes the partitioned shuffle plan Spark
+    picks once the per-host frame outgrows the threshold."""
+    from spider_1_spark.engine import operators as ops
+
+    monkeypatch.setattr(ops, "SALT_PATH_MAX_B", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        oracle, art = run_both(spark, "robots")
+    finally:
+        spark.conf.set(key, old)
+    check_equal(oracle, art)
+
+
 def bloom_false_positives(seen: dict, m_bits: int) -> int:
     """URLs that a one-shard Bloom of ``m_bits`` reported maybe-seen in
     the wave that first inserted them.  Wave w >= 1 probes seen version
@@ -235,10 +253,10 @@ def test_engine_matches_oracle_frontier_mode(spark, payload):
 
 
 def test_grouped_topk_ranks_null_host_rows(spark):
-    """A null host (host_udf emits None for unparseable urls) is a
-    legal group: the grouped-rank gate must RANK those rows against
-    cap_h like any host, not silently drop them (the pandas-groupby
-    default dropna would — r4 review finding)."""
+    """A null host is a legal group: the grouped-rank gate must RANK
+    those rows against cap_h like any host, not silently drop them (an
+    equi-join on host never matches null keys; the per-host first-rank
+    join is null-safe)."""
     from spider_1_spark.engine.operators import _grouped_topk
 
     rows = []
@@ -253,9 +271,9 @@ def test_grouped_topk_ranks_null_host_rows(spark):
     )
     # ranks over the session's 4 shuffle partitions (conftest)
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
-    out = _grouped_topk(df)
+    out, cached = _grouped_topk(df)
     got = out.collect()
-    out._rank_source.unpersist()
+    cached.unpersist()
     by_host = {}
     for r in got:
         by_host.setdefault(r.host, []).append(r.parent_rank)
@@ -270,13 +288,10 @@ def test_grouped_topk_ranks_null_host_rows(spark):
 
 def test_grouped_topk_null_host_spans_partitions(spark):
     """Null hosts sort FIRST under the range partitioning, so a large
-    unparseable-URL population straddles the first partition boundary
-    and reaches the driver-side offsets build as a SPANNING host with
-    host=None.  When any str host spans a boundary too, the offsets
-    sort compares (None, pid) with (str, pid) — which raised TypeError
-    and killed the whole query before the None-safe key (ADVICE r4).
-    200 null + 200 'hA' rows over 4 range partitions force both to
-    span; correctness of the ranks is asserted, not just survival."""
+    null-host population straddles the first partition boundary, and
+    so does a str host next to it.  A host's rank must then continue
+    across partitions: 200 null + 200 'hA' rows over 4 range
+    partitions force both to span; the ranks are asserted exactly."""
     from spider_1_spark.engine.operators import _grouped_topk
 
     rows = []
@@ -291,15 +306,15 @@ def test_grouped_topk_null_host_spans_partitions(spark):
     )
     # ranks over the session's 4 shuffle partitions (conftest)
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
-    out = _grouped_topk(df)
+    out, cached = _grouped_topk(df)
     got = out.collect()
-    out._rank_source.unpersist()
+    cached.unpersist()
     by_host: dict = {}
     for r in got:
         by_host.setdefault(r.host, []).append(r.parent_rank)
     # cap_h=150 > 400/4 rows-per-partition, so neither host fits in
-    # one partition's local rank range: correct output REQUIRES the
-    # cross-partition offsets to have been applied to both groups
+    # one partition's local rank range: correct output REQUIRES each
+    # group's rank to continue across partition boundaries
     assert {h: sorted(v) for h, v in by_host.items()} == {
         None: list(range(150)),
         "hA": list(range(150)),

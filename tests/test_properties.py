@@ -59,6 +59,44 @@ def test_canonicalize_query_sort_total(host_k, page, params):
         )
 
 
+# ------------------------------------------------ engine host column
+
+_label = st.text("abz09-", min_size=1, max_size=6)
+raw_urls = st.builds(
+    lambda scheme, user, host, port, path, query, frag: (
+        f"{scheme}://{user}{host}{port}{path}{query}{frag}"
+    ),
+    st.sampled_from(["http", "https", "HTTP", "ftp"]),
+    st.sampled_from(["", "user@", "u:pw@", "a@b@"]),
+    st.one_of(
+        st.lists(_label, min_size=1, max_size=3).map(".".join),
+        st.sampled_from(
+            ["Ex.Test", "127.0.0.1", "[::1]", "[2001:DB8::1]", "[::ffff:1.2.3.4]"]
+        ),
+    ),
+    st.sampled_from(["", ":", ":80", ":443", ":8080", ":65535"]),
+    st.sampled_from(["", "/", "/a/../b", "/p%7e/q", "/x:y"]),
+    st.sampled_from(["", "?", "?b=2&a=1", "?q=http://x/y", "?k"]),
+    st.sampled_from(["", "#f", "#/x?y"]),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.one_of(raw_urls, url_text), min_size=1, max_size=40))
+def test_engine_host_matches_host_of(spark, raws):
+    """``operators.with_host`` extracts the host JVM-side; on every
+    canonical URL (ports, IPv6, userinfo, query without a path) it must
+    equal ``urlnorm.host_of``, the oracle's host, and a null URL keeps a
+    null host."""
+    from spider_1_spark.engine.operators import with_host
+    from spider_1_spark.functions.urlnorm import host_of
+
+    urls = sorted({c for c in map(canonicalize, raws) if c is not None})
+    df = spark.createDataFrame([(u,) for u in urls] + [(None,)], "url string")
+    got = {r.url: r.host for r in with_host(df).collect()}
+    assert got == {None: None, **{u: host_of(u) for u in urls}}
+
+
 # ------------------------------------------------ oracle policy sweep
 
 policies = st.builds(

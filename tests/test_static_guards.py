@@ -113,12 +113,12 @@ def test_global_rank_uses_range_partitioning(spark):
         "id as depth", "id as parent_rank", "cast(id as int) as link_pos",
         "concat('u', id) as url"
     )
-    ranked = with_global_rank(
-        df, spark, ["depth", "parent_rank", "link_pos", "url"]
+    ranked, cached = with_global_rank(
+        df, ["depth", "parent_rank", "link_pos", "url"]
     )
     plan = _plan(ranked)
     assert "rangepartitioning" in plan.lower()
-    ranked._rank_source.unpersist()
+    cached.unpersist()
 
 
 def test_global_rank_exact_at_80_partitions(spark):
@@ -139,11 +139,11 @@ def test_global_rank_exact_at_80_partitions(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "80")
     try:
-        ranked = with_global_rank(
-            df, spark, ["depth", "parent_rank", "link_pos", "url"]
+        ranked, cached = with_global_rank(
+            df, ["depth", "parent_rank", "link_pos", "url"]
         )
         rows = ranked.collect()
-        max_pid = ranked._rank_source.agg(F.max("_pid")).first()[0]
+        max_pid = cached.agg(F.max("_pid")).first()[0]
     finally:
         spark.conf.set(key, old)
     assert max_pid >= 64, max_pid
@@ -151,7 +151,38 @@ def test_global_rank_exact_at_80_partitions(spark):
         rows, key=lambda r: (r.depth, r.parent_rank, r.link_pos, r.url)
     )
     assert [r.g for r in expect] == list(range(500))
-    ranked._rank_source.unpersist()
+    cached.unpersist()
+
+
+def test_rank_and_host_plans_stay_in_the_jvm(spark, monkeypatch):
+    """The per-host top-k on the grouped path, the global rank and the
+    host extraction are expressions, joins and shuffles only: no
+    physical plan node hands their rows to a Python worker."""
+    from spider_1_spark.engine import operators as ops
+    from spider_1_spark.reference_model.spider1_ref import Policy
+
+    monkeypatch.setattr(ops, "SALT_PATH_MAX_B", 0)
+    df = spark.range(60).selectExpr(
+        "concat('http://h', id % 3, '.x/p/', id) as url",
+        "cast(0 as int) as depth",
+        "id as parent_rank",
+        "cast(0 as int) as link_pos",
+        "cast(0 as int) as t0",
+    )
+    hosted = ops.with_host(df)
+    cand, cand_cached = ops.candidate_set(hosted, Policy(1, 2, 4, 10))
+    ranked, rank_cached = ops.with_global_rank(hosted, ops.KEY_COLS)
+    try:
+        for name, frame in (
+            ("candidate_set", cand), ("with_global_rank", ranked),
+            ("with_host", hosted),
+        ):
+            plan = _plan(frame)
+            for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, (name, node, plan)
+    finally:
+        cand_cached.unpersist()
+        rank_cached.unpersist()
 
 
 def test_politeness_window_is_salted(spark):
@@ -168,7 +199,9 @@ def test_politeness_window_is_salted(spark):
         "concat('http://h', id % 5, '.x/p/', id) as url",
         "cast(0 as int) as t0",
     )
-    plan = _plan(candidate_set(df, Policy()))
+    cand, cached = candidate_set(df, Policy())
+    assert cached is None
+    plan = _plan(cand)
     # two window operators: partition by (host, salt) then by host
     assert plan.lower().count("window") >= 2
     assert "xxhash64" in plan.lower()
