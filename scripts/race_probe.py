@@ -77,7 +77,7 @@ def main() -> None:
     tmp = tempfile.mkdtemp(prefix="race_probe_")
     raw = os.path.join(tmp, "raw")
     write_frontier(spark, raw, n_rows, n_hosts)
-    fr0, _ = ops.ingest_seed_frame(spark.read.parquet(raw))
+    fr0, _, _, _ = ops.ingest_seed_frame(spark.read.parquet(raw))
     fp = os.path.join(tmp, "v0")
     fr0.write.mode("overwrite").parquet(fp)
 

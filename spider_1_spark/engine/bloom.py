@@ -3,12 +3,12 @@
 BASELINE.json:6,14: "partitioned Bloom/cuckoo URL-seen filter
 maintained as … state tables at 10^10-URL scale".  Design:
 
-  * the seen set is sharded by ``shard = h1(url) % S`` where h1 is the
-    first half of a 128-bit blake2b of the URL (process-stable, shared
-    by probe and update paths); each shard owns a fixed-size numpy
-    bitmap sidecar, versioned like every other state table
-    (``bloom/v=<n>/shard-<k>.npy``) and committed under the same
-    manifest (SPEC-12 resume covers it);
+  * the seen set is sharded by ``shard = crc32(utf8(url)) % S``, JVM-side
+    in the update (``shard_col``) and with ``zlib.crc32`` in the probe
+    (``shard_of``), independent of the blake2b bit positions; each
+    shard owns a fixed-size numpy bitmap sidecar, versioned like every
+    other state table (``bloom/v=<n>/shard-<k>.npy``) and committed
+    under the same manifest (SPEC-12 resume covers it);
   * per wave, the NEW seen URLs are hash-partitioned by shard into at
     most ``spark.sql.shuffle.partitions`` tasks; each task owns a
     disjoint set of shards and streams them one at a time, ORing each
@@ -21,7 +21,9 @@ maintained as … state tables at 10^10-URL scale".  Design:
   * ZERO false negatives by construction (bits only set for real
     URLs — property-tested in tests/test_properties.py); false
     positives are resolved by the exact join on the (small)
-    maybe-seen side.
+    maybe-seen side;
+  * every manifest records the layout (``BloomStore.layout``), and
+    ``resume()`` refuses state written under another one.
 
 Bits: k=4 positions via Kirsch–Mitzenmacher double hashing
 (g_i = h1 + i*h2) over an m-bit bitmap per shard.
@@ -32,6 +34,7 @@ from __future__ import annotations
 import hashlib
 import io as _io
 import os
+import zlib
 from typing import Iterator, Protocol, runtime_checkable
 
 import numpy as np
@@ -169,6 +172,19 @@ def bit_positions(urls, m_bits: int) -> np.ndarray:
     return _positions(h1, h2, m_bits)
 
 
+def shard_of(urls, n_shards: int) -> np.ndarray:
+    """Each URL's shard, ``crc32(utf8(url)) % n_shards``."""
+    return np.array([zlib.crc32(u.encode("utf-8")) % n_shards for u in urls],
+                    dtype=np.int64)
+
+
+def shard_col(url_col: str, n_shards: int):
+    """Spark column: ``shard_of`` as a JVM expression."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.crc32(F.col(url_col).cast("binary")), F.lit(n_shards))
+
+
 class BloomStore:
     """Versioned shard-file bloom sidecars under the state root.
 
@@ -182,6 +198,12 @@ class BloomStore:
         self.n_shards = n_shards
         self.m_bits = m_bits
         self.io: ShardIO = io if io is not None else LocalShardIO()
+
+    @property
+    def layout(self) -> dict:
+        """What a probe must agree on; recorded in every manifest."""
+        return {"shards": self.n_shards, "bits": self.m_bits,
+                "shard_hash": "crc32"}
 
     def vdir(self, version: int) -> str:
         return os.path.join(self.base, f"v={version}")
@@ -213,20 +235,6 @@ class BloomStore:
                 self.io.delete_dir(path)
 
 
-def _shard_col(url_col: str, n_shards: int):
-    """Spark column: the URL's shard id, ``h1(url) % n_shards`` — the
-    same blake2b-derived shard as ``probe_pandas`` uses."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.IntegerType())
-    def shard_udf(urls: pd.Series) -> pd.Series:
-        h1, _ = _hashes(urls)
-        return pd.Series((h1 % np.uint64(n_shards)).astype(np.int32))
-
-    return shard_udf(F.col(url_col))
-
-
 def probe_pandas(
     urls: pd.Series,
     bloom: BloomStore,
@@ -236,7 +244,7 @@ def probe_pandas(
     """Worker-side probe of one pandas batch (no extra shuffle) —
     fused into the fetch/extract stage by operators.fetch_extract."""
     h1, h2 = _hashes(urls)
-    shards = (h1 % np.uint64(bloom.n_shards)).astype(np.int64)
+    shards = shard_of(urls, bloom.n_shards)
     byte, bit = _bit_addresses(h1, h2, bloom.m_bits)
     hit = np.zeros(len(urls), dtype=bool)
     for shard in np.unique(shards):
@@ -253,8 +261,8 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
            new_version: int) -> None:
     """OR the new URLs' bits into each touched shard.
 
-    Rows are hash-partitioned on the TRUE shard key (same
-    blake2b-derived shard as the probe) into ``min(n_shards,
+    Rows are hash-partitioned on the shard key (``shard_col``, a JVM
+    expression equal to the probe's ``shard_of``) into ``min(n_shards,
     spark.sql.shuffle.partitions)`` tasks, so each task owns a disjoint
     set of shards and exactly one task writes each shard file —
     concurrent writers to one shard would lose bits (false negatives).
@@ -263,7 +271,8 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
     publish, move on — at most one bitmap in memory per task.  Fewer
     tasks than shards saves the per-task Python-worker cost, which
     dwarfs the hashing and shard I/O.  Untouched shards are found at
-    older versions by ``load_shard``.
+    older versions by ``load_shard``.  Collecting one row per shard,
+    not counting, spares an aggregate stage.
     """
     from spider_1_spark.engine.operators import shuffle_partitions
 
@@ -277,7 +286,7 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
                 if s != shard:
                     if bm is not None:
                         bloom.write_shard(new_version, shard, bm)
-                        yield pd.DataFrame({"shard": [shard], "n": [1]})
+                        yield pd.DataFrame({"shard": [shard]})
                     shard = int(s)
                     bm = bloom.load_shard(prev_version, shard).copy()
                 byte, bit = _bit_addresses(*_hashes(grp["url"]), bloom.m_bits)
@@ -286,12 +295,12 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
                 )
         if bm is not None:
             bloom.write_shard(new_version, shard, bm)
-            yield pd.DataFrame({"shard": [shard], "n": [1]})
+            yield pd.DataFrame({"shard": [shard]})
 
     (
-        new_urls_df.select("url", _shard_col("url", n_shards).alias("_shard"))
+        new_urls_df.select("url", shard_col("url", n_shards).alias("_shard"))
         .repartition(n_tasks, "_shard")
         .sortWithinPartitions("_shard")
-        .mapInPandas(gen, "shard int, n int")
-        .count()
+        .mapInPandas(gen, "shard int")
+        .collect()
     )

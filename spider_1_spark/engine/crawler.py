@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from spider_1_spark.engine import bloom as bloom_mod
 from spider_1_spark.engine import operators as ops
-from spider_1_spark.engine.state import HOSTS_SCHEMA, METRICS_SCHEMA
+from spider_1_spark.engine.state import METRICS_SCHEMA
 from spider_1_spark.reference_model.spider1_ref import COUNTER_NAMES, Policy
 
 KEY = ops.KEY_COLS  # depth, parent_rank, link_pos, url
@@ -172,41 +172,33 @@ class SparkCrawler:
     # ------------------------------------------------------------ run
 
     def run(self, seeds: list[str], max_waves: int | None = None) -> CrawlArtifacts:
-        """Fresh crawl: ingest seeds, loop waves, commit per wave."""
-        frontier, seed_dups = ops.ingest_seeds(self.spark, seeds)
-        return self._start(frontier, seed_dups, max_waves)
+        """Fresh crawl from a seed list; the list index is the explicit
+        seed rank, never ``monotonically_increasing_id`` (SURVEY §7)."""
+        raw = self.spark.createDataFrame(
+            list(enumerate(seeds)), "seed_rank long, raw_url string"
+        )
+        return self.run_frontier(raw, max_waves)
 
     def run_frontier(
         self, seed_frame: DataFrame, max_waves: int | None = None
     ) -> CrawlArtifacts:
-        """Fresh crawl from a (seed_rank, raw_url) DataFrame (bench path)."""
-        frontier, seed_dups = ops.ingest_seed_frame(seed_frame)
-        return self._start(frontier, seed_dups, max_waves)
-
-    def _start(
-        self,
-        frontier: DataFrame,
-        seed_dups: list[tuple[int, int]],
-        max_waves: int | None,
-    ) -> CrawlArtifacts:
+        """Fresh crawl from a (seed_rank, raw_url) DataFrame.  The
+        frontier and seen v0 writes and the seed Bloom update read one
+        cached seed frame; hosts v0 is never written (it reads empty)."""
         st = self.store
         st.cleanup()
-        st.write_version("frontier", 0, frontier)
-        seen0 = st.read_version("frontier", 0).select(
-            "url",
-            "host_hash",
-            F.lit(0).alias("first_wave"),
-            "depth",
-            "parent_rank",
-            "link_pos",
-        )
-        st.write_version("seen", 0, seen0)
-        st.write_version("hosts", 0, self.spark.createDataFrame([], HOSTS_SCHEMA))
         self.bloom.prune(-1)
-        bloom_mod.update(seen0.select("url"), self.bloom, -1, 0)
-        # empty seed frontier => zero waves, like the oracle's
-        # `while frontier:` never entering the loop
-        empty = st.read_version("frontier", 0).limit(1).count() == 0
+        frontier, cached, seed_dups, n_seeds = ops.ingest_seed_frame(seed_frame)
+        try:
+            st.write_version("frontier", 0, frontier)
+            seen0 = frontier.select(
+                "url", "host_hash", F.lit(0).alias("first_wave"),
+                "depth", "parent_rank", "link_pos",
+            )
+            st.write_version("seen", 0, seen0)
+            bloom_mod.update(frontier.select("url"), self.bloom, -1, 0)
+        finally:
+            _release_cached(cached)
         manifest = {
             "wave_id": -1,
             "versions": {"frontier": 0, "seen": 0, "hosts": 0},
@@ -218,17 +210,27 @@ class SparkCrawler:
                 ("ingest", pid, "deduped", n) for pid, n in seed_dups
             ],
             "counters": {k: 0 for k in COUNTER_NAMES},
-            "done": empty,
+            "bloom": self.bloom.layout,
+            # empty seed frontier => zero waves, like the oracle's
+            # `while frontier:` never entering the loop
+            "done": n_seeds == 0,
         }
         st.commit(manifest)
         return self._loop(manifest, max_waves)
 
     def resume(self, max_waves: int | None = None) -> CrawlArtifacts:
-        """EP2: continue from the last committed manifest (SPEC-12)."""
+        """EP2: continue from the last committed manifest (SPEC-12).
+        State whose Bloom layout is not this crawler's (or unrecorded)
+        raises ValueError: its shards would probe as false negatives."""
         st = self.store
         manifest = st.read_manifest()
         if manifest is None:
             raise ValueError(f"no manifest at {self.store.root}")
+        if manifest.get("bloom") != self.bloom.layout:
+            raise ValueError(
+                f"bloom layout {manifest.get('bloom')} of the state differs "
+                f"from this crawler's {self.bloom.layout}"
+            )
         st.cleanup()
         self.bloom.prune(manifest["versions"]["seen"])
         return self._loop(manifest, max_waves)
@@ -272,9 +274,8 @@ class SparkCrawler:
                 # one worker per branch (≤ 8 live submissions a wave:
                 # log, gate, hosts, harvest, frontier and the harvest's
                 # images/seen/bloom).  The hosts write blocks on the
-                # gate and the bloom update on the seen write while
-                # holding a worker, so the pool stays above the live
-                # count or a queued dependency deadlocks it.
+                # gate while holding a worker, so the pool stays above
+                # the live count or a queued dependency deadlocks it.
                 pool, frames = ThreadPoolExecutor(max_workers=12), []
                 wave = self._wave_critical(latest, pending, pool, frames)
                 waves_run += 1
@@ -483,6 +484,7 @@ class SparkCrawler:
                 "versions": {name: n + 1 for name, n in v.items()},
                 "seq_next": prev["seq_next"] + n_fetched,
                 "global_fetched": global_fetched,
+                "bloom": self.bloom.layout,
                 "done": n_anchor + n_deferred == 0
                 or global_fetched >= self.policy.global_page_budget,
             },
@@ -544,17 +546,11 @@ class SparkCrawler:
             )
             .drop("_rj", "_ft")
         )
-        # allow-all hosts (rules_json "[]") take the CASE's JVM branch,
-        # but Spark plans the UDF as an ArrowEvalPython node BELOW the
-        # CASE, so every frontier row still crosses to Python; the UDF
-        # passes rule-less rows through as allowed.  (A two-branch union
-        # was tried and reverted: it scans the frontier twice.)
-        no_rules = F.col("rules_json").isNull() | (F.col("rules_json") == "[]")
+        # every frontier row crosses to Python (a CASE skipping rule-less
+        # rows still plans the UDF below it; a two-branch union scans
+        # the frontier twice); the UDF allows null, "" and "[]" rules
         fr = fr.withColumn(
-            "allowed",
-            F.when(no_rules, F.lit(True)).otherwise(
-                ops.robots_allowed_udf(F.col("url"), F.col("rules_json"))
-            ),
+            "allowed", ops.robots_allowed_udf(F.col("url"), F.col("rules_json"))
         )
         fr = fr.withColumn("t0", F.coalesce(F.col("fetch_total"), F.lit(0)))
         fr = fr.persist()
@@ -705,9 +701,10 @@ class SparkCrawler:
         *eligible* if it is an image or an anchor within ``max_depth``.
         A URL in the seen set counts every occurrence in ``deduped``;
         an unseen URL with an eligible occurrence is fresh, its first
-        eligible occurrence by (seq, pos) enters the seen set and the
-        other eligible ones count; an unseen URL with only beyond-depth
-        anchors is silent.  The Bloom flag (A6) decides which URLs the
+        eligible occurrence by (seq, pos) enters the seen set and every
+        occurrence after it counts, eligible or not; beyond-depth
+        anchors before it, and an unseen URL with only beyond-depth
+        anchors, are silent.  The Bloom flag (A6) decides which URLs the
         exact seen join (A7) looks at: a Bloom-negative URL is unseen.
 
         Cross-wave dependencies are waited HERE, not at wave entry:
@@ -728,17 +725,15 @@ class SparkCrawler:
         # --- A12/A13(+A2+A6): fused fetch+extract+canon+bloom -------
         refs = ops.fetch_extract(fetchset, self.web_b, self.bloom, v["seen"])
         eligible = (F.col("kind") != "a") | (F.col("parent_depth") < pol.max_depth)
-        # A Bloom-negative beyond-depth anchor can be neither a dup nor
-        # fresh: it is dropped before the shuffle.  Hash aggregate
-        # (min_by, which skips the null ordering of ineligible rows):
-        # partial map-side combine collapses duplicate URLs before the
-        # shuffle.
+        # min_by skips the null ordering of ineligible rows; partial
+        # map-side combine collapses duplicate URLs before the shuffle
+        key = F.struct("seq", "pos")
         first = F.struct("parent_depth", "seq", "pos", "kind", "caption")
-        by_url = refs.filter(F.col("maybe_seen") | eligible).groupBy("url").agg(
+        by_url = refs.groupBy("url").agg(
             F.bool_or("maybe_seen").alias("maybe_seen"),
             F.count("*").alias("n_all"),
-            F.count_if(eligible).alias("n_eligible"),
-            F.min_by(first, F.when(eligible, F.struct("seq", "pos"))).alias("first"),
+            F.min_by(first, F.when(eligible, key)).alias("first"),
+            F.collect_list(F.when(~eligible, key)).alias("beyond"),
         )
         # the exact seen join (A7) matches Bloom-positive URLs only; a
         # Bloom-negative URL is unseen (zero false negatives)
@@ -747,8 +742,12 @@ class SparkCrawler:
             seen_urls, F.col("maybe_seen") & (F.col("url") == F.col("_seen")), "left"
         )
         is_seen = F.col("_seen").isNotNull()
-        is_fresh = ~is_seen & (F.col("n_eligible") > 0)
-        dups = F.when(is_seen, F.col("n_all")).when(is_fresh, F.col("n_eligible") - 1)
+        is_fresh = ~is_seen & F.col("first").isNotNull()
+        first_key = F.struct(F.col("first.seq"), F.col("first.pos"))
+        silent = F.size(F.filter("beyond", lambda k: k < first_key))
+        dups = F.when(is_seen, F.col("n_all")).when(
+            is_fresh, F.col("n_all") - 1 - silent
+        )
         decided = by_url.select(
             "url", "first.*", is_fresh.alias("fresh"), dups.otherwise(0).alias("dups")
         )
@@ -788,20 +787,14 @@ class SparkCrawler:
             )
 
         def update_bloom() -> None:
-            # A18: OR the new URLs' bits into the bloom shards.  Off the
-            # critical join: the next wave needs the shards only at its
-            # FETCH stage.  It MUST complete before this wave's manifest
-            # commit: a committed manifest with missing shard bits would
-            # give the resume path bloom false negatives (SPEC-4).  An
-            # empty delta writes no version: load_shard falls back to
-            # the newest older one.
-            fut_seen.result()
+            # A18: OR the new URLs' bits into the bloom shards, off the
+            # critical path (the next wave probes them at its FETCH
+            # stage) but durable before this wave's commit, or resume
+            # would see bloom false negatives (SPEC-4).  An empty delta
+            # writes no version: load_shard falls back to an older one.
             if n_fresh:
                 bloom_mod.update(
-                    st.read_version("seen", v["seen"] + 1).select("url"),
-                    self.bloom,
-                    v["seen"],
-                    v["seen"] + 1,
+                    fresh.select("url"), self.bloom, v["seen"], v["seen"] + 1
                 )
 
         fut_images = self._submit(pool, LAGGING_POOL, self._images, wave, fresh, n_img)

@@ -100,45 +100,43 @@ def with_host(df: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------ A1
 
-def ingest_seeds(
-    spark: SparkSession, seeds: list[str]
-) -> tuple[DataFrame, list[tuple[int, int]]]:
-    """A1: ordered seed list → wave-0 frontier (SPEC-1/4).
-
-    Returns (frontier_df, per-partition duplicate counts).  Seed index
-    is explicit — never ``monotonically_increasing_id`` (SURVEY §7 hard
-    part 1).  First occurrence wins; duplicates count into ``deduped``.
-    """
-    raw = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(seeds)], "seed_rank long, raw_url string"
-    )
-    return ingest_seed_frame(raw)
-
-
 def ingest_seed_frame(
     raw: DataFrame,
-) -> tuple[DataFrame, list[tuple[int, int]]]:
-    """Distributed seed ingestion from a (seed_rank, raw_url) frame;
-    the duplicate counts come per partition of the dedup window, one
-    job."""
-    df = raw.withColumn("url", canonicalize_udf(F.col("raw_url"))).filter(
-        F.col("url").isNotNull()
-    )
+) -> tuple[DataFrame, DataFrame, list[tuple[int, int]], int]:
+    """A1: (seed_rank, raw_url) frame → wave-0 frontier (SPEC-1/4).
+    The seed index is an explicit column, never
+    ``monotonically_increasing_id`` (SURVEY §7); first occurrence wins,
+    duplicates count into ``deduped``.
+
+    Returns ``(frontier, cached, dups, n_kept)``: the frontier, the
+    canonicalized ranked frame it reads (the caller releases it), the
+    per-partition duplicate counts and the frontier's row count, all
+    from one job, so each seed crosses to Python once.  A lazy
+    localCheckpoint, unlike a persist, keeps AQE's coalesced partition
+    count, so the v0 tables keep their file count.
+    """
     w = Window.partitionBy("url").orderBy("seed_rank")
-    df = df.withColumn("_rn", F.row_number().over(w))
-    dups = partition_counts(df.filter(F.col("_rn") > 1))
-    df = df.filter(F.col("_rn") == 1).drop("_rn")
-    frontier = with_host(df).select(
-        "url",
-        "host",
-        "host_hash",
-        F.lit(0).alias("depth"),
-        F.col("seed_rank").alias("parent_rank"),
-        F.lit(0).alias("link_pos"),
-        F.lit(0).alias("discovered_wave"),
-        F.lit("PENDING").alias("state"),
+    ranked = (
+        raw.withColumn("url", canonicalize_udf(F.col("raw_url")))
+        .filter(F.col("url").isNotNull())
+        .withColumn("_rn", F.row_number().over(w))
+        .localCheckpoint(eager=False)
     )
-    return frontier, dups
+    rows = (
+        ranked.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(
+            F.count_if(F.col("_rn") > 1).alias("dups"),
+            F.count_if(F.col("_rn") == 1).alias("kept"),
+        )
+        .collect()
+    )
+    dups = [(int(r["pid"]), int(r["dups"])) for r in rows if r["dups"]]
+    frontier = with_host(ranked.filter(F.col("_rn") == 1)).select(
+        "url", "host", "host_hash", F.lit(0).alias("depth"),
+        F.col("seed_rank").alias("parent_rank"), F.lit(0).alias("link_pos"),
+        F.lit(0).alias("discovered_wave"), F.lit("PENDING").alias("state"),
+    )
+    return frontier, ranked, dups, sum(int(r["kept"]) for r in rows)
 
 
 # ------------------------------------------------------------------ A11
@@ -149,7 +147,7 @@ def robots_allowed_udf(urls: pd.Series, rules_json: pd.Series) -> pd.Series:
     cache: dict[str, list] = {}
     out = []
     for u, rj in zip(urls, rules_json):
-        if rj is None or rj == "":
+        if rj in (None, "", "[]"):
             out.append(True)
             continue
         rules = cache.get(rj)

@@ -152,19 +152,21 @@ class IcebergStateStore:
         tagged = df.withColumn("_v", F.lit(version))
         self._writer(tagged, self._tbl(name)).overwritePartitions()
 
-    def read_version(self, name: str, version: int) -> DataFrame:
-        return (
-            self.spark.table(self._tbl(name))
-            .filter(F.col("_v") == version)
-            .drop("_v")
-        )
-
-    def read_delta_union(self, name: str, upto_version: int) -> DataFrame:
+    def _read(self, name: str, tag: str, keep) -> DataFrame:
+        """``name``'s rows whose ``tag`` column passes ``keep``, without
+        the tag.  A table never written reads as empty, like the parquet
+        store's missing directory: the crawl writes no hosts v0."""
         try:
             t = self.spark.table(self._tbl(name))
         except Exception:
             return self.spark.createDataFrame([], SCHEMAS[name])
-        return t.filter(F.col("_v") <= upto_version).drop("_v")
+        return t.filter(keep(F.col(tag))).drop(tag)
+
+    def read_version(self, name: str, version: int) -> DataFrame:
+        return self._read(name, "_v", lambda v: v == version)
+
+    def read_delta_union(self, name: str, upto_version: int) -> DataFrame:
+        return self._read(name, "_v", lambda v: v <= upto_version)
 
     # ---------------------------------------------------- append tables
 
@@ -173,8 +175,4 @@ class IcebergStateStore:
         self._writer(tagged, self._tbl(name)).overwritePartitions()
 
     def read_waves(self, name: str, upto_wave: int) -> DataFrame:
-        try:
-            t = self.spark.table(self._tbl(name))
-        except Exception:
-            return self.spark.createDataFrame([], SCHEMAS[name])
-        return t.filter(F.col("_w") <= upto_wave).drop("_w")
+        return self._read(name, "_w", lambda w: w <= upto_wave)

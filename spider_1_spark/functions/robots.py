@@ -1,9 +1,9 @@
 """RFC 9309 robots.txt parsing + longest-match evaluation — SPEC-6.
 
 Shared by the reference oracle and the Spark engine (rules are stored
-in the ``hosts`` state table as ``array<struct<allow:boolean,
-prefix:string>>`` and evaluated in a vectorized pandas UDF, SURVEY §2
-op A11).
+in the ``hosts`` state table's ``rules_json`` column as a JSON string,
+a list of ``[allow, pattern]`` pairs, and evaluated in a vectorized
+pandas UDF, SURVEY §2 op A11).
 
 Pinned semantics (SPEC-6):
   * group selection: the group whose user-agent token is the longest

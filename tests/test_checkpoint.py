@@ -136,6 +136,32 @@ def test_crawl_log_seq_is_a_required_parquet_field(spark, monkeypatch, salt_max_
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_resume_refuses_another_bloom_layout(spark):
+    """Every manifest records the Bloom layout.  resume() with another
+    shard count or bitmap size, or on state that recorded none, raises
+    ValueError before any Spark job — probing shards written under
+    another layout would give false negatives."""
+    web = SyntheticWeb(N_HOSTS)
+    root = tempfile.mkdtemp(prefix="spider1_layout_")
+    try:
+        c = SparkCrawler(spark, POLICY, web, root)
+        c.run(make_seeds(N_SEEDS, N_HOSTS), max_waves=0)
+        assert c.store.read_manifest()["bloom"] == c.bloom.layout
+        tracker = spark.sparkContext.statusTracker()
+        jobs = set(tracker.getJobIdsForGroup())
+        for kw in ({"bloom_shards": 16}, {"bloom_bits": 1 << 20}):
+            with pytest.raises(ValueError, match="bloom layout"):
+                SparkCrawler(spark, POLICY, web, root, **kw).resume()
+        manifest = c.store.read_manifest()
+        del manifest["bloom"]
+        c.store.commit(manifest)
+        with pytest.raises(ValueError, match="bloom layout"):
+            SparkCrawler(spark, POLICY, web, root).resume()
+        assert set(tracker.getJobIdsForGroup()) == jobs
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_manifest_commit_is_atomic_rename(spark):
     """The manifest file is always complete JSON (tmp+os.replace)."""
     root = tempfile.mkdtemp(prefix="spider1_manifest_")

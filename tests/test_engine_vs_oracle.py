@@ -15,7 +15,8 @@ Configs chosen (tests/../scripts probe) to exercise every gate:
 ``tight_g`` hits mid-wave G exhaustion; ``robots`` hits robots_blocked,
 deferral, per-host caps and decode failures; ``dup_seeds`` repeats seed
 URLs (seed-ingest ``deduped``); ``g_zero`` exhausts G before the first
-fetch.
+fetch; ``deep_dedup`` counts beyond-depth anchors that follow their
+URL's first discovery in the same wave.
 """
 
 from __future__ import annotations
@@ -38,6 +39,10 @@ CONFIGS = {
     "dup_seeds": (8, 12, Policy(3, 2, 8, 11)),
     # G = 0: one wave, every URL dropped before anything is fetched
     "g_zero": (8, 4, Policy(2, 2, 5, 0)),
+    # deferred URLs keep their depth, so wave 3 mixes depths 2 and 3:
+    # a beyond-depth anchor follows its URL's first eligible occurrence
+    # in the same wave, a dedup (7 in all, not 6)
+    "deep_dedup": (2, 1, Policy(3, 2, 6, 10)),
 }
 
 

@@ -11,11 +11,11 @@ object-store impl documented on ShardIO).
 
 from __future__ import annotations
 
-import hashlib
 import io
 import os
 import sys
 import uuid
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -182,8 +182,7 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _shard_of(url: str, n_shards: int) -> int:
-    d = hashlib.blake2b(url.encode("utf-8"), digest_size=16).digest()
-    return int.from_bytes(d[:8], "big") % n_shards
+    return zlib.crc32(url.encode("utf-8")) % n_shards
 
 
 def _npy_bytes(bm: np.ndarray) -> bytes:

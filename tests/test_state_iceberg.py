@@ -87,6 +87,19 @@ def test_read_version_filters_and_drops_tag():
     assert out is filtered.return_value.drop.return_value
 
 
+def test_read_version_of_a_missing_table_is_empty():
+    """The crawl writes no hosts v0, so wave 0 reads a version of a
+    table that does not exist yet: an empty frame of the table's
+    schema, as from the parquet store's missing directory."""
+    from spider_1_spark.engine.state import HOSTS_SCHEMA
+
+    spark = MagicMock()
+    spark.table.side_effect = Exception("table not found")
+    out = IcebergStateStore(spark, "cat.db").read_version("hosts", 0)
+    spark.createDataFrame.assert_called_once_with([], HOSTS_SCHEMA)
+    assert out is spark.createDataFrame.return_value
+
+
 def test_manifest_commit_appends_next_seq():
     row = {"manifest_json": json.dumps({"wave_id": 4, "_commit_seq": 9})}
     rows = [MagicMock(__getitem__=lambda self, k: row[k])]

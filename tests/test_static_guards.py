@@ -185,6 +185,25 @@ def test_rank_and_host_plans_stay_in_the_jvm(spark, monkeypatch):
         rank_cached.unpersist()
 
 
+def test_bloom_update_shards_in_the_jvm(spark, monkeypatch, tmp_path):
+    """``bloom.update``'s shard id is a JVM expression: below the
+    shard exchange the plan hands no row to a Python worker; the one
+    Python node is the per-task ``mapInPandas`` above it."""
+    from spider_1_spark.engine import bloom
+
+    plans = []
+    urls = spark.createDataFrame([("http://a.test/",)], "url string")
+    # plan the update's one job instead of running it
+    monkeypatch.setattr(type(urls), "collect", lambda df: plans.append(_plan(df)))
+    bloom.update(urls, bloom.BloomStore(str(tmp_path), 8, 1 << 12), -1, 0)
+    (plan,) = plans
+    tree = plan.split("\n\n")[0]
+    below = tree[tree.index("Exchange"):]
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in below, (node, plan)
+    assert "MapInPandas" in tree[: tree.index("Exchange")], plan
+
+
 def test_politeness_window_is_salted(spark):
     """candidate_set must contain BOTH the salt-local window and the
     exact per-host window (A5 skew-proofing)."""
