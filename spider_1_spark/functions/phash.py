@@ -32,19 +32,16 @@ def dhash64(rgb: np.ndarray) -> int:
     px = rgb.astype(np.int64)
     gray = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
 
-    grid = np.empty((8, 9), dtype=np.int64)
-    row_edges = [(r * h) // 8 for r in range(9)]
-    col_edges = [(c * w) // 9 for c in range(10)]
-    for r in range(8):
-        for c in range(9):
-            blk = gray[row_edges[r] : row_edges[r + 1], col_edges[c] : col_edges[c + 1]]
-            grid[r, c] = int(blk.sum()) // blk.size
+    # block sums over the 8x9 grid: every block is non-empty (h >= 8,
+    # w >= 9), so the edges strictly increase and reduceat sums
+    # [edge[i], edge[i+1]) along each axis
+    row_edges = np.arange(9) * h // 8
+    col_edges = np.arange(10) * w // 9
+    sums = np.add.reduceat(
+        np.add.reduceat(gray, row_edges[:-1], axis=0), col_edges[:-1], axis=1
+    )
+    grid = sums // np.outer(np.diff(row_edges), np.diff(col_edges))
 
-    bits = (grid[:, :8] > grid[:, 1:]).ravel()  # k = 8*r + c, row-major
-    val = 0
-    for k in range(64):
-        if bits[k]:
-            val |= 1 << (63 - k)  # bit 0 = MSB
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
+    bits = grid[:, :8] > grid[:, 1:]  # bit k = 8*r + c, row-major
+    # bit 0 = MSB, read back as a signed big-endian int64
+    return int(np.packbits(bits).view(">i8")[0])

@@ -138,7 +138,8 @@ def test_crawl_log_seq_is_a_required_parquet_field(spark, monkeypatch, salt_max_
 
 def test_resume_refuses_another_bloom_layout(spark):
     """Every manifest records the Bloom layout.  resume() with another
-    shard count or bitmap size, or on state that recorded none, raises
+    shard count or bitmap size, on state whose layout names no shard
+    codec (raw .npy shards), or on state that recorded none, raises
     ValueError before any Spark job — probing shards written under
     another layout would give false negatives."""
     web = SyntheticWeb(N_HOSTS)
@@ -153,6 +154,13 @@ def test_resume_refuses_another_bloom_layout(spark):
             with pytest.raises(ValueError, match="bloom layout"):
                 SparkCrawler(spark, POLICY, web, root, **kw).resume()
         manifest = c.store.read_manifest()
+        # state from before the zstd shard codec: .npy shard files
+        manifest["bloom"] = {
+            k: v for k, v in c.bloom.layout.items() if k != "codec"
+        }
+        c.store.commit(manifest)
+        with pytest.raises(ValueError, match="bloom layout"):
+            SparkCrawler(spark, POLICY, web, root).resume()
         del manifest["bloom"]
         c.store.commit(manifest)
         with pytest.raises(ValueError, match="bloom layout"):

@@ -446,3 +446,49 @@ def test_minhash_signature_deterministic(seed, n_tokens):
     s2 = textops.minhash_signature(textops.shingle_hashes(text), a, b)
     assert (s1 == s2).all()
     assert (s1 < textops.MERSENNE61 + 1).all()
+
+
+# ------------------------------------------------------------- dHash
+
+def _dhash64_loop(rgb: np.ndarray) -> int:
+    """Reference dHash: one Python-level sum per grid block, bits
+    folded into a Python int (SPEC-9, as pinned in functions/phash)."""
+    h, w = rgb.shape[:2]
+    px = rgb.astype(np.int64)
+    gray = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
+    grid = np.empty((8, 9), dtype=np.int64)
+    row_edges = [(r * h) // 8 for r in range(9)]
+    col_edges = [(c * w) // 9 for c in range(10)]
+    for r in range(8):
+        for c in range(9):
+            blk = gray[row_edges[r]:row_edges[r + 1], col_edges[c]:col_edges[c + 1]]
+            grid[r, c] = int(blk.sum()) // blk.size
+    bits = (grid[:, :8] > grid[:, 1:]).ravel()
+    val = 0
+    for k in range(64):
+        if bits[k]:
+            val |= 1 << (63 - k)
+    return val - (1 << 64) if val >= 1 << 63 else val
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(8, 70), st.integers(9, 70), st.integers(0, 2**32 - 1),
+       st.sampled_from(["noise", "flat", "bands"]))
+@example(8, 9, 0, "noise")  # the minimum grid: one pixel per block
+@example(8, 9, 0, "flat")
+@example(13, 10, 1, "noise")  # 8 and 9 divide neither side
+@example(17, 71, 2, "bands")
+def test_dhash64_matches_block_loop(h, w, seed, kind):
+    """The reduceat kernel equals the per-block loop bit for bit, on
+    sizes 8 (rows) and 9 (columns) need not divide."""
+    from spider_1_spark.functions.phash import dhash64
+
+    rng = np.random.Generator(np.random.PCG64(seed))
+    if kind == "noise":
+        rgb = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
+    elif kind == "flat":
+        rgb = np.full((h, w, 3), int(rng.integers(0, 256)), dtype=np.uint8)
+    else:  # ties and steps between neighbouring blocks
+        col = rng.integers(0, 4, w) * 80
+        rgb = np.broadcast_to(col[None, :, None], (h, w, 3)).astype(np.uint8)
+    assert dhash64(rgb) == _dhash64_loop(rgb)

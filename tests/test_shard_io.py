@@ -6,12 +6,12 @@ bitmap would clear real bits and produce bloom FALSE NEGATIVES, which
 the engine's zero-FN contract forbids.  These tests pin that property
 for the local backend and prove the seam is genuinely pluggable (an
 in-memory backend passes the same round-trip, standing in for the
-object-store impl documented on ShardIO).
+object-store impl documented on ShardIO).  They also pin the zstd shard
+codec (a payload of the wrong size is an error, never zeros).
 """
 
 from __future__ import annotations
 
-import io
 import os
 import sys
 import uuid
@@ -20,6 +20,8 @@ import zlib
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark import cloudpickle
 
 from spider_1_spark.engine import bloom
@@ -159,6 +161,62 @@ def test_local_prune_removes_crash_residue(tmp_path):
     assert not os.path.exists(store.vdir(3))
 
 
+bitmaps = st.integers(1, 64).flatmap(
+    lambda n: st.one_of(
+        st.just(np.zeros(n, dtype=np.uint8)),
+        st.just(np.full(n, 255, dtype=np.uint8)),
+        st.binary(min_size=n, max_size=n).map(
+            lambda b: np.frombuffer(b, dtype=np.uint8)
+        ),
+    )
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(bitmaps, st.integers(0, 5), st.integers(0, 7))
+def test_codec_round_trip(bm, version, shard):
+    """write_shard / load_shard return the bitmap bit for bit, all-zero
+    and all-one included; the file is zstd, named shard-<k>.zst."""
+    io = MemShardIO()
+    store = BloomStore("/state", n_shards=8, m_bits=8 * len(bm), io=io)
+    store.write_shard(version, shard, bm)
+    assert store.shard_path(version, shard).endswith(f"/shard-{shard}.zst")
+    for v in (version, version + 3):
+        assert np.array_equal(store.load_shard(v, shard), bm)
+
+
+def test_wrong_size_payload_raises(tmp_path):
+    """A shard written for another bitmap size, or a payload that is
+    not zstd, raises ValueError naming the shard and version: read as
+    zeros it would be a bloom false negative."""
+    small = BloomStore(str(tmp_path), n_shards=4, m_bits=1 << 12)
+    small.write_shard(2, 3, _bitmap(small.m_bits, ["http://a.test/"]))
+    for m_bits in (1 << 13, 1 << 11):
+        other = BloomStore(str(tmp_path), n_shards=4, m_bits=m_bits)
+        with pytest.raises(ValueError, match=r"shard 3 at v=2"):
+            other.load_shard(4, 3)
+    small.io.write_atomic(small.shard_path(1, 0), b"not a zstd frame")
+    with pytest.raises(ValueError, match=r"shard 0 at v=1"):
+        small.load_shard(1, 0)
+
+
+def test_new_version_dir_entry_is_flushed(tmp_path, monkeypatch):
+    """The first shard published into a version dir also flushes the
+    dir's entry in bloom/: without it a power loss after the commit
+    could drop the whole version and resume would read an older
+    bitmap (a bloom false negative).  Later shards in the same dir
+    flush only the dir itself."""
+    synced = []
+    monkeypatch.setattr(bloom, "_fsync_dir", synced.append)
+    store = BloomStore(str(tmp_path), n_shards=2, m_bits=1 << 12)
+    bm = _bitmap(store.m_bits, ["http://a.test/"])
+    store.write_shard(0, 0, bm)
+    assert synced == [store.vdir(0), store.base]
+    synced.clear()
+    store.write_shard(0, 1, bm)
+    assert synced == [store.vdir(0)]
+
+
 class WriteOnceShardIO(LocalShardIO):
     """Publishes each final key at most once — the shape of an
     object-store conditional PUT (``If-None-Match: *``).  ``os.link``
@@ -185,19 +243,14 @@ def _shard_of(url: str, n_shards: int) -> int:
     return zlib.crc32(url.encode("utf-8")) % n_shards
 
 
-def _npy_bytes(bm: np.ndarray) -> bytes:
-    buf = io.BytesIO()
-    np.save(buf, bm, allow_pickle=False)
-    return buf.getvalue()
-
-
 def test_update_streams_more_shards_than_tasks(spark, tmp_path):
     """``bloom.update`` with 16 shards over the session's 4 shuffle
     partitions: each task owns several shards and streams them.  Tiny
     Arrow batches split one shard's rows across batches.  Over two
     versions every inserted URL probes positive, untouched shards get
-    no new file, every file equals a driver-side build byte for byte,
-    and the write-once ShardIO proves each shard is published once."""
+    no new file, every file decompresses to a driver-side build bit for
+    bit, and the write-once ShardIO proves each shard is published
+    once."""
     n_shards = 16
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) < n_shards
     store = BloomStore(
@@ -234,12 +287,13 @@ def test_update_streams_more_shards_than_tasks(spark, tmp_path):
         inserted = v0 if version == 0 else v0 + v1
         names = sorted(os.listdir(store.vdir(version)))
         assert names == sorted(
-            f"shard-{k}.npy" for k in touched[version]
+            f"shard-{k}.zst" for k in touched[version]
         ), f"v={version}: exactly the touched shards, no tmp residue"
         for k in touched[version]:
             want = _bitmap(
                 store.m_bits,
                 [u for u in inserted if _shard_of(u, n_shards) == k],
             )
-            got = store.io.read(store.shard_path(version, k))
-            assert got == _npy_bytes(want), (version, k)
+            # the file at this version exists, so load_shard reads it
+            got = store.load_shard(version, k)
+            assert np.array_equal(got, want), (version, k)
